@@ -100,6 +100,17 @@ def database_size_breakdown(
     return out
 
 
+def _reads_under(df: DataFrame, path: str) -> bool:
+    """True when ``df`` scans any file below directory ``path``."""
+    import os
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    root = (url.path if url.scheme else os.path.abspath(path)).rstrip("/")
+    root += "/"
+    return any(urlparse(f).path.startswith(root) for f in df.inputFiles())
+
+
 class Engine:
     def __init__(
         self,
@@ -154,7 +165,14 @@ class Engine:
         results are repaired incrementally for the touched entities
         (reference cache reconciliation, Searchdomain.cs:298-326) — or
         invalidated wholesale for domains with
-        ``cache_reconciliation=False`` (the reference's default policy)."""
+        ``cache_reconciliation=False`` (the reference's default policy).
+
+        ``ingest`` is read once: `build_index` pins the exploded batch,
+        its embedding-cache lookup, the embedded misses and the batch's
+        index rows (``result.index_flat``), and the merge, the
+        dirty-domain collect, the invalidation and the reconcile all
+        derive from that pinned ``result.index_flat``. The merged index and the grown embedding
+        cache are pinned too, before they replace the engine's state."""
         cache = self.embedding_cache.withColumn(
             "vector", F.col("vector").cast("array<double>")
         )
@@ -177,16 +195,17 @@ class Engine:
         ).localCheckpoint(eager=True)
         self.index_flat = new_index
         self.embedding_cache = new_cache
-        self._note_dirty(ingest)
-        touched = result.index_flat.select("searchdomain", "entity").distinct()
-        self._invalidate_disabled(touched.select("searchdomain").distinct())
+        touched = result.index_flat.select("searchdomain", "entity")
+        self._note_dirty(touched)
+        self._invalidate_disabled(touched)
         self._reconcile_query_results(touched)
         return result
 
-    def _invalidate_disabled(self, touched_domains: DataFrame) -> None:
+    def _invalidate_disabled(self, touched: DataFrame) -> None:
         """Clear materialized results for touched domains whose settings
         opt out of reconciliation (cache invalidation, the reference's
-        SearchdomainInvalidateCache behavior applied on change)."""
+        SearchdomainInvalidateCache behavior applied on change).
+        ``touched`` is any frame with a searchdomain column."""
         disabled = [
             d
             for d, s in self._settings.items()
@@ -194,7 +213,11 @@ class Engine:
         ]
         if not disabled or not self.query_results.head(1):
             return
-        drop = touched_domains.filter(F.col("searchdomain").isin(disabled))
+        drop = (
+            touched.select("searchdomain")
+            .distinct()
+            .filter(F.col("searchdomain").isin(disabled))
+        )
         self.query_results = self.query_results.join(
             F.broadcast(drop), "searchdomain", "left_anti"
         ).localCheckpoint(eager=True)
@@ -208,15 +231,23 @@ class Engine:
         # from the uploaded set are dropped globally) — all partitions are
         # potentially stale, so the next save() must be a full rewrite.
         self._dirty = None
-        self._invalidate_disabled(uploaded.select("searchdomain").distinct())
+        self._invalidate_disabled(uploaded)
         self._drop_deleted_from_results()
 
     def delete_entities(self, names: DataFrame) -> None:
+        """Delete the (searchdomain, entity) pairs in ``names``. ``names``
+        is read once: its distinct pairs are pinned, and the anti-join,
+        the dirty-domain collect and the invalidation all read that pin."""
+        keys = (
+            names.select("searchdomain", "entity")
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
         self.index_flat = index_build.delete_entities(
-            self.index_flat, names
+            self.index_flat, keys
         ).localCheckpoint(eager=True)
-        self._note_dirty(names)
-        self._invalidate_disabled(names.select("searchdomain").distinct())
+        self._note_dirty(keys)
+        self._invalidate_disabled(keys)
         self._drop_deleted_from_results()
 
     def _drop_deleted_from_results(self) -> None:
@@ -720,25 +751,28 @@ class Engine:
 
         dirty = sorted(self._dirty)
         if dirty:
-            for table, df in (
-                ("index_flat", self.index_flat),
-                ("query_results", self.query_results),
-            ):
+            for table in ("index_flat", "query_results"):
                 tpath = f"{path}/{table}"
+                df = getattr(self, table)
+                if _reads_under(df, tpath):
+                    # still the lazy scan `load` returned: pin it before
+                    # its files are replaced, and keep serving from the pin
+                    df = df.localCheckpoint(eager=True)
+                    setattr(self, table, df)
                 changed = df.filter(F.col("searchdomain").isin(dirty))
                 if table == "query_results" and not (
                     changed.head(1) or self._saved_table_exists(tpath)
                 ):
                     continue  # nothing materialized, nothing persisted
-                storage.overwrite_partitions(
-                    changed, tpath, ["searchdomain"]
-                )
                 present = {
                     r[0]
                     for r in changed.select("searchdomain")
                     .distinct()
                     .collect()
                 }
+                storage.overwrite_partitions(
+                    changed, tpath, ["searchdomain"]
+                )
                 storage.remove_partition_dirs(
                     tpath, "searchdomain", sorted(set(dirty) - present)
                 )

@@ -5,7 +5,7 @@
       → explode models                                 (one row per vector)
       → sha256 text hash                               (F1, change detection)
       → distinct (text_hash, model)                    (E4 — dedup before embed)
-      → anti-join embedding cache                      (J8 — misses only)
+      → left-join embedding cache                      (J8 — misses only)
       → embed misses (deterministic / provider seam)   (S5/S6)
       → union with cache hits → join back to rows      → index_flat
       → new cache entries appended                     (X3)
@@ -17,7 +17,7 @@ limited to changed text because unchanged text hits the cache (the
 reference's hash-change predicate, SearchdomainHelper.cs:229-245).
 
 At 100 TB: the only wide operations are the distinct on (text_hash, model)
-and the cache anti-join — both keyed on the same columns, so one shuffle
+and the cache lookup join — both keyed on the same columns, so one shuffle
 partitioning serves both; everything else is scan-stage expression work.
 """
 
@@ -79,18 +79,36 @@ def build_index(
     of cache MISSES through batched per-model HTTP calls (the reference's
     AIProvider dependency, AIProvider.cs:39-133); None keeps the
     deterministic JVM-side expression. Either way only misses embed —
-    cache hits never reach the provider."""
+    cache hits never reach the provider.
+
+    ``materialize_embedded=True`` (the upsert and streaming write paths)
+    reads ``ingest`` once and the embedding cache once, pinning:
+      - ``rows``: the exploded, hashed batch;
+      - the batch's distinct (text_hash, model) pairs left-joined to the
+        cache, which splits into hits and misses;
+      - ``embedded``: the embedded misses, so the embedding pass runs
+        once for both of its consumers;
+      - the returned ``index_flat``: the batch's index rows.
+    Every later consumer of the batch (merge, dirty-domain collect,
+    invalidation, query-result reconcile, per-batch persistence) derives
+    from the returned pins, so a caller's ``createDataFrame(list)`` batch
+    costs one pass of Python-worker tasks, not one per consumer."""
     rows = ingest.withColumn("model", F.explode("models")).withColumn(
         "text_hash", text_hash(F.col("text"))
     )
+    if materialize_embedded:
+        rows = rows.localCheckpoint(eager=True)
     needed = rows.select("text_hash", "text", "model").dropDuplicates(
         ["text_hash", "model"]
     )
 
     if embedding_cache is not None:
         cache = embedding_cache.select("text_hash", "model", "vector")
-        misses = needed.join(cache, ["text_hash", "model"], "left_anti")
-        hits = needed.join(cache, ["text_hash", "model"], "inner").select(
+        looked = needed.join(cache, ["text_hash", "model"], "left")
+        if materialize_embedded:
+            looked = looked.localCheckpoint(eager=True)
+        misses = looked.filter(F.col("vector").isNull()).drop("vector")
+        hits = looked.filter(F.col("vector").isNotNull()).select(
             "text_hash", "model", "vector"
         )
     else:
@@ -146,6 +164,8 @@ def build_index(
             "vector",
         )
     )
+    if materialize_embedded:
+        index_flat = index_flat.localCheckpoint(eager=True)
     return BuildResult(
         index_flat=index_flat,
         new_cache_entries=embedded,
@@ -157,8 +177,9 @@ def merge_index(existing: DataFrame, built: DataFrame) -> DataFrame:
     """Upsert: replace every entity present in ``built`` wholesale
     (delete+insert per entity — the MERGE shape of the reference's
     per-entity diff, SearchdomainHelper.cs:148-343). Entities not touched
-    are kept as-is."""
-    touched = built.select("searchdomain", "entity").distinct()
+    are kept as-is. The anti-join ignores duplicate keys, so ``built``'s
+    keys are not de-duplicated first (that would cost a shuffle)."""
+    touched = built.select("searchdomain", "entity")
     kept = existing.join(touched, ["searchdomain", "entity"], "left_anti")
     return kept.unionByName(built)
 
@@ -172,9 +193,9 @@ def finalize_session(index: DataFrame, uploaded: DataFrame) -> DataFrame:
 
 def delete_entities(index: DataFrame, names: DataFrame) -> DataFrame:
     """Delete-by-join (reference DatabaseHelper.cs:196-209) as an anti-join
-    rewrite."""
+    rewrite; duplicate names need no de-duplication."""
     return index.join(
-        names.select("searchdomain", "entity").distinct(),
+        names.select("searchdomain", "entity"),
         ["searchdomain", "entity"],
         "left_anti",
     )

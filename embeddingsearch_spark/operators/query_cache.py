@@ -46,9 +46,10 @@ def incremental_refresh(
     """Repair materialized rankings after the entities in ``touched``
     (searchdomain, entity) changed in ``index``: re-score only those
     entities, splice into the kept rows, re-rank. Equals a full
-    `materialize` over the updated index (tested)."""
+    `materialize` over the updated index (tested). ``touched`` may repeat
+    keys: both of its uses are semi/anti joins."""
     keys = ["searchdomain", "entity"]
-    touched_keys = touched.select(keys).distinct()
+    touched_keys = touched.select(keys)
     kept = query_results.join(touched_keys, keys, "left_anti").select(
         "searchdomain", "query", "entity", "score"
     )

@@ -45,6 +45,10 @@ def get_spark(
         # Arrow for pandas-UDF boundaries (embedder, multimodal decode).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # A mix of serve and write requests generates ~150 classes, more
+        # than the default 100-entry codegen cache holds: its LRU evicted
+        # each class before reuse and every request recompiled.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # NOTE: no spark.sql.legacy.parquet.nanosAsLong here — tables.load
         # reads events.parquet with an explicit schema (ts LONG) so the code
         # works in ANY session, including harnesses that build their own.

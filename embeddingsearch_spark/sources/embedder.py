@@ -58,7 +58,10 @@ def deterministic_embedding(
         F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x * x)
     )
     safe = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
-    return F.transform(arr, lambda x: x / safe)
+    # zip_with against a repeated norm evaluates the norm once per row; a
+    # transform lambda that closes over it re-evaluates every sha256
+    # component for each of the dim elements
+    return F.zip_with(arr, F.array_repeat(safe, dim), lambda x, n: x / n)
 
 
 def _embed_one(text: str, model: str, dim: int) -> list[float]:

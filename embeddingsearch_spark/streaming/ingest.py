@@ -80,16 +80,20 @@ class StreamingIndexer:
         ).localCheckpoint(eager=True)
         self.n_batches += 1
         if self.save_path is not None:
-            self._persist_batch(batch, built)
+            self._persist_batch(built)
 
-    def _persist_batch(self, batch: DataFrame, built) -> None:
+    def _persist_batch(self, built) -> None:
         from pyspark.sql import functions as F
 
         from embeddingsearch_spark import storage
 
+        # the batch's pinned index rows, not the micro-batch itself, so
+        # the source is read once per trigger
         touched = [
             r[0]
-            for r in batch.select("searchdomain").distinct().collect()
+            for r in built.index_flat.select("searchdomain")
+            .distinct()
+            .collect()
         ]
         if touched:
             storage.overwrite_partitions(

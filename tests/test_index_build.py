@@ -24,10 +24,12 @@ def _ingest(spark, rows):
     return spark.createDataFrame(rows, INGEST_SCHEMA)
 
 
-def _rows(n, text_fn=lambda i: f"document number {i} about topic {i % 3}"):
+def _rows(
+    n, text_fn=lambda i: f"document number {i} about topic {i % 3}", domain="sd"
+):
     return [
         (
-            "sd",
+            domain,
             f"ent_{i}",
             "Mean",
             dp,
@@ -60,6 +62,111 @@ def test_embedder_paths_agree(spark):
     for k in a:
         assert a[k] == pytest.approx(b[k], abs=1e-12)
         assert sum(x * x for x in a[k]) == pytest.approx(1.0)  # L2-normalized
+
+
+def test_embedding_norm_matches_per_element_formula(spark):
+    """Dividing by a repeated norm (norm computed once per row) gives the
+    same vectors as the per-element transform that recomputes it."""
+    from embeddingsearch_spark.sources.embedder import _component
+
+    dim = 32
+    df = spark.range(300).select(
+        F.concat(F.lit("text number "), F.col("id").cast("string")).alias(
+            "text"
+        ),
+        F.when(F.col("id") % 2 == 0, F.lit("mock:modelA"))
+        .otherwise(F.lit("mock:modelB"))
+        .alias("model"),
+    )
+    arr = F.array(
+        *[_component(F.col("text"), F.col("model"), k) for k in range(dim)]
+    )
+    norm = F.sqrt(F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x * x))
+    safe = F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
+    out = df.select(
+        F.transform(arr, lambda x: x / safe).alias("old"),
+        deterministic_embedding(F.col("text"), F.col("model"), dim).alias(
+            "new"
+        ),
+    ).collect()
+    assert len(out) == 300
+    assert all(r["old"] == r["new"] for r in out)
+
+
+def test_write_path_reads_caller_batch_once(spark, tmp_path):
+    """`index_entities` and `delete_entities` read the caller's frame
+    once (its Python-RDD scan bumps an accumulator per row), with the
+    dirty set tracked, a materialized query reconciled and a domain that
+    opts out of reconciliation invalidated — and give the same state as
+    an Engine fed plain frames."""
+    from embeddingsearch_spark.api import SearchdomainSettings
+
+    sc = spark.sparkContext
+
+    base = _rows(4, lambda i: f"document {i}") + _rows(
+        3, lambda i: f"other {i}", "sd_off"
+    )
+    batch = _rows(6, lambda i: f"document {i} v2") + _rows(
+        2, lambda i: f"other {i}", "sd_off"
+    )
+    names = [("sd", "ent_1"), ("sd_off", "ent_0"), ("sd", "ent_1")]
+    query = "document 2 v2"
+
+    def engine(path):
+        e = Engine(spark, dim=8)
+        e.create_searchdomain(
+            "sd_off", SearchdomainSettings(cache_reconciliation=False)
+        )
+        e.index_entities(_ingest(spark, base))
+        e.materialize_query(query)
+        e.save(path)  # tracks the dirty set from here on
+        return e
+
+    def counted(rows, schema):
+        acc = sc.accumulator(0)
+
+        def bump(r):
+            acc.add(1)
+            return r
+
+        return spark.createDataFrame(
+            sc.parallelize(rows).map(bump), schema
+        ), acc
+
+    eng = engine(str(tmp_path / "a"))
+    ref = engine(str(tmp_path / "b"))
+
+    ing, acc = counted(batch, INGEST_SCHEMA)
+    eng.index_entities(ing)
+    assert acc.value == len(batch)
+    assert eng._dirty == {"sd", "sd_off"}
+    ref.index_entities(_ingest(spark, batch))
+
+    names_schema = "searchdomain string, entity string"
+    dels, acc = counted(names, names_schema)
+    eng._dirty = set()
+    eng.delete_entities(dels)
+    assert acc.value == len(names)
+    assert eng._dirty == {"sd", "sd_off"}
+    ref.delete_entities(spark.createDataFrame(names, names_schema))
+
+    def rows_of(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    idx_cols = ref.index_flat.columns
+    assert rows_of(eng.index_flat, idx_cols) == rows_of(
+        ref.index_flat, idx_cols
+    )
+    qr_cols = ["searchdomain", "query", "entity", "score", "rank"]
+    got = rows_of(eng.query_results, qr_cols)
+    assert got == rows_of(ref.query_results, qr_cols)
+    # reconciled in sd (equal to a fresh search without the deleted
+    # entity), invalidated in sd_off
+    fresh = eng.search(query, "sd").withColumn("query", F.lit(query))
+    assert got == rows_of(fresh, qr_cols)
+    assert {r[0] for r in got} == {"sd"}
+    assert ("sd", "ent_1") not in {(r[0], r[2]) for r in got}
+    assert len(got) == 5
 
 
 def test_build_dedups_and_uses_cache(spark):

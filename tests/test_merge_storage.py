@@ -187,6 +187,32 @@ def test_query_results_persist_and_selectively_rewrite(eng, spark, tmp_path):
     ) == _sorted_rows(eng.query_results)
 
 
+def test_incremental_save_after_load_keeps_loaded_tables(eng, spark, tmp_path):
+    """A loaded Engine's index_flat is a lazy scan of the files the next
+    incremental save rewrites: the save pins it first, so the save
+    succeeds, the Engine still searches, and the materialized query
+    reaches disk."""
+    root = str(tmp_path / "db")
+    eng.save(root)
+    e2 = Engine(spark, dim=8)
+    e2.load(root)
+    e2.materialize_query("a1 text text", searchdomain="sdA")
+    assert e2._dirty == {"sdA"}
+    e2.save(root)
+    assert e2.search("a1 text text", searchdomain="sdA").count() == 2
+    e3 = Engine(spark, dim=8)
+    e3.load(root)
+    assert _sorted_rows(e3.index_flat.select(*eng.index_flat.columns)) == (
+        _sorted_rows(eng.index_flat)
+    )
+    assert _sorted_rows(
+        e3.read_results("a1 text text", "sdA").select(
+            *e2.query_results.columns
+        )
+    ) == _sorted_rows(e2.query_results)
+    assert e3.query_results.count() == 2
+
+
 def test_save_to_new_path_is_full_write(eng, spark, tmp_path):
     root1 = str(tmp_path / "db1")
     root2 = str(tmp_path / "db2")
