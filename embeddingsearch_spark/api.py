@@ -392,7 +392,8 @@ class Engine:
 
     def _reconcile_query_results(self, touched: DataFrame) -> None:
         """X2: re-score ONLY touched entities for every materialized
-        query and splice into the kept rankings.
+        (searchdomain, query) pair — never in a domain that did not
+        materialize the query (the reference's per-domain QueryCache).
 
         Fully set-based: query vectors are derived from the cached-query
         DataFrame itself (deterministic_embedding is a Column expression),
@@ -406,10 +407,9 @@ class Engine:
             return
         qvecs = (
             self.cached_queries()
-            .select("query")
-            .distinct()
             .crossJoin(F.broadcast(self.models_in_use()))
             .select(
+                "searchdomain",
                 "query",
                 "model",
                 deterministic_embedding(
@@ -735,6 +735,9 @@ class Engine:
             else (path == self._save_root and self._dirty is not None)
         )
         if not inc:
+            self._pin_reads_under(
+                path, ("index_flat", "embedding_cache", "query_results")
+            )
             self.index_flat.write.partitionBy("searchdomain").mode(
                 "overwrite"
             ).parquet(f"{path}/index_flat")
@@ -751,14 +754,10 @@ class Engine:
 
         dirty = sorted(self._dirty)
         if dirty:
+            self._pin_reads_under(path, ("index_flat", "query_results"))
             for table in ("index_flat", "query_results"):
                 tpath = f"{path}/{table}"
                 df = getattr(self, table)
-                if _reads_under(df, tpath):
-                    # still the lazy scan `load` returned: pin it before
-                    # its files are replaced, and keep serving from the pin
-                    df = df.localCheckpoint(eager=True)
-                    setattr(self, table, df)
                 changed = df.filter(F.col("searchdomain").isin(dirty))
                 if table == "query_results" and not (
                     changed.head(1) or self._saved_table_exists(tpath)
@@ -793,6 +792,14 @@ class Engine:
                 "vector", F.col("vector").cast(vec_type)
             ).write.mode("append").parquet(cache_path)
         self._dirty = set()
+
+    def _pin_reads_under(self, path: str, tables) -> None:
+        """Pin (and serve from) each of ``tables`` that still lazily
+        scans its files under ``path``, which the save will replace."""
+        for table in tables:
+            df = getattr(self, table)
+            if _reads_under(df, f"{path}/{table}"):
+                setattr(self, table, df.localCheckpoint(eager=True))
 
     def _saved_table_exists(self, tpath: str) -> bool:
         import os

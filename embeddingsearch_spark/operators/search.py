@@ -43,13 +43,16 @@ from embeddingsearch_spark.functions.similarity import similarity_dispatch
 
 def score_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """corpus (index_flat shape) × queries (query, model, vector) →
-    one row per (corpus row, query) with the dispatched similarity."""
-    q = F.broadcast(
-        queries.select(
-            "query", F.col("model").alias("q_model"), F.col("vector").alias("qvec")
-        )
+    one row per (corpus row, query) with the dispatched similarity.
+    When ``queries`` also carries a searchdomain column, each query
+    scores only the rows of its own domain."""
+    keys = ["model"] + (
+        ["searchdomain"] if "searchdomain" in queries.columns else []
     )
-    j = corpus.join(q, corpus["model"] == q["q_model"], "inner")
+    q = F.broadcast(
+        queries.select(*keys, "query", F.col("vector").alias("qvec"))
+    )
+    j = corpus.join(q, keys, "inner")
     sim = similarity_dispatch(F.col("simmethod"), F.col("vector"), F.col("qvec"))
     return j.select(
         "searchdomain",

@@ -14,6 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory in whole GiB, within [1g, 32g]: local mode
+    runs every task in the driver JVM, and a heap past RAM gets killed."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "32g"
+    return f"{min(32, max(1, total // 2 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "embeddingsearch-spark",
     master: str | None = None,
@@ -25,13 +35,13 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "32g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # local mode runs everything in the driver JVM; the 1g default
-        # heap GC-thrashes any real workload on this 128 GiB host
+        # local mode runs everything in the driver JVM; Spark's 1g
+        # default heap GC-thrashes any real workload
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: coalesce small shuffle partitions, split skewed ones, and

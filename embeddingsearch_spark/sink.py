@@ -223,8 +223,6 @@ class PartitionOverwriteSink(IndexSink):
             if isinstance(partition_col, str)
             else list(partition_col)
         )
-        # backward-compat attribute (single-col callers introspect it)
-        self.partition_col = self.pcols[0]
 
     def delete_insert(
         self,

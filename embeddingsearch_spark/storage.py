@@ -247,33 +247,35 @@ def compact_index_table(
     target_file_mb: int = 128,
 ) -> dict:
     """Small-file compaction for a hive-partitioned (optionally
-    bucketed) CATALOG index table maintained by incremental upserts —
-    the operational complement of the partition-overwrite sink:
-    streaming create-or-upsert lands one file set per micro-batch per
-    touched cell, so a long-lived index accretes KB-scale files that
-    murder scan planning (one task + one open per file). This rewrites
+    bucketed) CATALOG index table that writers APPEND to (an injected
+    `sink.MergeSink`, plain ``insertInto`` appends): each append lands
+    its own file set in the cells it touches, and KB-scale files murder
+    scan planning (one task + one open per file). Upserts through
+    `save_bucketed` / `sink.PartitionOverwriteSink` never fragment —
+    they leave each touched cell at <= n_buckets files. This rewrites
     ONLY the partitions whose data-file count exceeds
-    ``max_files_per_partition``, through the same dynamic-overwrite
-    insertInto path the sink uses (bucketing survives — verified), one
-    writer task per fragmented partition, so each compacted cell ends
-    at ≤ n_buckets files; partitions under the bound are never read or
-    written (byte-identical; tested). Rows and serving results are
-    unchanged by construction — compaction changes costs, never
-    results (gated: a post-compaction serve shares the uncompacted
-    oracle verbatim). ``max_files_per_partition=None`` switches to
-    the ADAPTIVE bound: a partition is fragmented iff it holds more
-    than 2× the files its byte volume needs at ``target_file_mb``
-    per file (floor 4) — the data decides, so a big partition keeps
-    its legitimately-many files and a tiny one tolerates a handful of
-    micro-batch leftovers before a rewrite. Returns
-    {"partitions_compacted", "files_before", "files_after"} (file
-    counts over the fragmented partitions only)."""
+    ``max_files_per_partition`` — floored at the table's bucket count,
+    since a partition at bucket granularity is already compact —
+    through the same dynamic-overwrite insertInto path the sink uses
+    (bucketing survives — verified), one writer task per fragmented
+    partition, so each compacted cell ends at ≤ n_buckets files;
+    partitions under the bound are never read or written
+    (byte-identical; tested). Rows and serving results are unchanged
+    by construction (gated: a post-compaction serve shares the
+    uncompacted oracle verbatim). ``max_files_per_partition=None``
+    switches to the ADAPTIVE bound: a partition is fragmented iff it
+    holds more than 2× the files its byte volume needs at
+    ``target_file_mb`` per file (floor 4) — so a big partition keeps
+    its legitimately-many files. Returns {"partitions_compacted",
+    "files_before", "files_after"} (file counts over the fragmented
+    partitions only)."""
     import os
     from urllib.parse import unquote
 
     from pyspark.sql import functions as F
 
-    loc = _table_location(spark, table)
+    desc = _describe(spark, table)
+    loc = _table_location(spark, table, desc)
     if loc is None:
         raise ValueError(f"cannot resolve location of {table}")
     if not os.path.isdir(loc):
@@ -328,18 +330,19 @@ def compact_index_table(
             out[tuple(kv[c] for c in pcols)] = (len(data), nbytes)
         return out
 
+    n_buckets = int(desc.get("Num Buckets") or 0)
+
     def bound(nbytes: int) -> int:
         # adaptive mode: a partition legitimately needs about
         # ceil(bytes / target_file_mb) files (one task open per file
         # is the scan cost being bounded); 2× slack + a floor of 4
         # tolerates normal write parallelism before rewriting
         if max_files_per_partition is not None:
-            return int(max_files_per_partition)
+            return max(n_buckets, int(max_files_per_partition))
         import math
 
-        return max(
-            4, 2 * math.ceil(nbytes / (target_file_mb * 1024 * 1024))
-        )
+        need = 2 * math.ceil(nbytes / (target_file_mb * 1024 * 1024))
+        return max(4, n_buckets, need)
 
     counts = leaf_listing()
     frag = {
@@ -385,17 +388,27 @@ def compact_index_table(
     }
 
 
-def _table_location(spark, table: str):
-    """Resolve a live table's storage location from the catalog."""
+def _describe(spark, table: str) -> dict:
+    """A live table's ``DESCRIBE TABLE EXTENDED`` rows as {name: value}
+    (Location, Num Buckets, ...); empty when the table does not exist."""
+    # existence-check first: DESCRIBE on a missing table logs an ERROR
+    # line even when the exception is caught
+    if not spark.catalog.tableExists(table):
+        return {}
+    return {
+        r[0]: r[1]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+
+
+def _table_location(spark, table: str, desc: dict | None = None):
+    """Resolve a live table's storage location from the catalog (from
+    ``desc``, its `_describe` rows, when the caller has them)."""
     from pathlib import Path
     from urllib.parse import urlparse
 
-    if not spark.catalog.tableExists(table):
-        return None
-    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-        if r[0] == "Location":
-            return Path(urlparse(r[1]).path)
-    return None
+    loc = (_describe(spark, table) if desc is None else desc).get("Location")
+    return Path(urlparse(loc).path) if loc else None
 
 
 def drop_table(spark, table: str) -> None:
@@ -415,17 +428,8 @@ def drop_table(spark, table: str) -> None:
     from pathlib import Path
     from urllib.parse import urlparse
 
-    loc = None
     try:
-        # existence-check first: DESCRIBE on a missing table logs an
-        # ERROR line even when the exception is caught
-        if spark.catalog.tableExists(table):
-            for r in spark.sql(
-                f"DESCRIBE TABLE EXTENDED {table}"
-            ).collect():
-                if r[0] == "Location":
-                    loc = Path(urlparse(r[1]).path)
-                    break
+        loc = _table_location(spark, table)
     except Exception:
         loc = None
     spark.sql(f"DROP TABLE IF EXISTS {table}")

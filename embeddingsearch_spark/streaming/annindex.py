@@ -25,6 +25,12 @@ At warehouse scale each upsert is one MERGE into the bucketed table
 (cost: the batch + one rewrite of touched buckets on Delta); here the
 local-parquet fallback rewrites the table, which the batch operators
 already pin eagerly before overwriting.
+
+No in-stream compaction: the default writers (`storage.save_bucketed`,
+`sink.PartitionOverwriteSink`) cluster on (partition dirs, bucket id), so
+every touched cell stays at <= ``n_buckets`` files (tested per family). A
+caller who injects an APPENDING ``sink=`` (`MergeSink`) compacts with
+`storage.compact_index_table` or the catalog's OPTIMIZE.
 """
 
 from __future__ import annotations
@@ -398,122 +404,6 @@ class _RunningPopsFederated:
         return out
 
 
-class _WriteCounter:
-    """Per-(table, partition) write counters backing the
-    ``compact_every="auto"`` trigger: the drains already KNOW which
-    partitions each micro-batch touches, so fragmentation can be
-    inferred from accrued writes instead of a fixed cadence — a
-    partition that has taken ``bound`` writes since its last
-    compaction has accreted ~bound micro-batch file sets and is due;
-    QUIET partitions never trigger anything (no periodic listing, no
-    hand-tuned cadence — the last hand-tuned knob in the streaming
-    path removed). `compact_index_table` then re-checks actual file
-    counts against its own bound, so a spurious trigger costs one
-    listing, never a rewrite. Driver-side and bounded: one counter
-    per touched (table, partition)."""
-
-    def __init__(self, bound: int):
-        self.bound = max(2, int(bound))
-        self.writes: dict = {}
-
-    def record(self, table: str, parts) -> None:
-        for p in parts:
-            k = (table, tuple(p))
-            self.writes[k] = self.writes.get(k, 0) + 1
-
-    def due(self, table: str) -> bool:
-        return any(
-            c >= self.bound
-            for (t, _), c in self.writes.items()
-            if t == table
-        )
-
-    def reset(self, table: str) -> None:
-        for k in [k for k in self.writes if k[0] == table]:
-            del self.writes[k]
-
-    def reset_due(self, table: str) -> None:
-        """Forget only the partitions AT/OVER the bound — the ones the
-        trigger just sent through the compactor's file-count recheck.
-        Partitions still under the bound keep their accrued counts:
-        wiping them too (the old table-wide reset) pushed their next
-        compaction a full bound of extra writes past intent."""
-        for k in [
-            k
-            for k, c in self.writes.items()
-            if k[0] == table and c >= self.bound
-        ]:
-            del self.writes[k]
-
-
-def _touched_parts(batch_df: DataFrame, partition_col, compact_every):
-    """The batch's distinct partition tuples — the auto trigger's
-    input (bounded collect: one row per touched partition). Skipped
-    entirely outside "auto" mode."""
-    if compact_every != "auto":
-        return None
-    pcs = (
-        [partition_col]
-        if isinstance(partition_col, str)
-        else list(partition_col)
-    )
-    return [
-        tuple(r) for r in batch_df.select(*pcs).distinct().collect()
-    ]
-
-
-def _maybe_compact(
-    spark,
-    tables,
-    n_batches: int,
-    compact_every,
-    max_files,
-    counter: _WriteCounter | None = None,
-    touched=None,
-) -> None:
-    """Compact the drain's fragmented partitions in place
-    (`storage.compact_index_table` — only partitions over the bound
-    are rewritten; rows and serving results are unchanged by
-    construction). Two trigger modes:
-
-    - ``compact_every=N``: every N micro-batches (the fixed cadence);
-    - ``compact_every="auto"``: write-count driven — fire for a table
-      exactly when one of its partitions has accrued
-      ``compact_max_files`` (default 8) writes since its last
-      compaction (`_WriteCounter`), skipping the periodic listing on
-      quiet tables entirely.
-
-    Closes the file-hygiene loop inside the stream itself: a
-    long-running federated ingest otherwise accretes exactly the
-    micro-batch leftovers the adaptive bound was built to clean.
-
-    ``compact_every="auto"`` is the RECOMMENDED production setting
-    (round-9 promotion): it needs no tuning, quiet partitions never
-    pay even a listing, and the streaming gates run with it on at no
-    bench regression (BASELINE.md round-9) — the parameter DEFAULT
-    stays ``None`` only so pre-auto callers keep their exact
-    behavior; new deployments should pass "auto"."""
-    from embeddingsearch_spark.storage import compact_index_table
-
-    if compact_every == "auto":
-        for t in tables:
-            if touched:
-                counter.record(t, touched)
-            if counter.due(t) and spark.catalog.tableExists(t):
-                compact_index_table(
-                    spark, t, max_files_per_partition=max_files
-                )
-                counter.reset_due(t)
-        return
-    if not compact_every or n_batches % compact_every:
-        return
-    for t in tables:
-        if spark.catalog.tableExists(t):
-            compact_index_table(
-                spark, t, max_files_per_partition=max_files
-            )
-
-
 def _drain(
     stream: DataFrame, step, checkpoint_dir: str | None = None
 ) -> None:
@@ -707,8 +597,6 @@ def graph_index_available_now(
     vec_table = f"{prefix}_vectors"
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from embeddingsearch_spark.storage import replace_bucketed
 
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -935,8 +823,6 @@ def federated_ivf_index_available_now(
     centroid_id_col: str = "centroid_id",
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ) -> list[int]:
     """`ivf_index_available_now` under per-collection quantizers: the
     stream's rows carry their collection column, each micro-batch
@@ -947,7 +833,8 @@ def federated_ivf_index_available_now(
     per-collection centroid table is FIXED for the stream's lifetime
     (required on the CREATING run, ignored afterwards), so maintained
     and rebuilt indexes serve identically (batch-equivalence, the
-    family invariant). Returns per-batch ingested-row counts."""
+    family invariant). Returns per-batch ingested-row counts.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.ann import (
         assign_centroids_federated,
         save_federated_ivf_index,
@@ -956,7 +843,6 @@ def federated_ivf_index_available_now(
 
     spark = stream.sparkSession
     history: list[int] = []
-    counter = _WriteCounter(compact_max_files or 8)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -985,13 +871,6 @@ def federated_ivf_index_available_now(
                 partition_col=partition_col, n_buckets=n_buckets,
                 id_col=id_col, centroid_id_col=centroid_id_col,
             )
-        _maybe_compact(
-            spark, [f"{prefix}_assigned"], len(history),
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
 
     _drain(stream, step, checkpoint_dir)
     return history
@@ -1285,8 +1164,6 @@ def federated_pq_index_available_now(
     codes_col: str = "codes",
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ) -> list[int]:
     """`pq_index_available_now` under per-collection codebooks — the
     compressed member of the federated streaming set (IVF above):
@@ -1295,7 +1172,8 @@ def federated_pq_index_available_now(
     upsert rewrites only the tenant partitions the batch lands in.
     ``codebooks_by`` ({collection: Codebooks}, trained offline per
     tenant) is required on the CREATING run and ignored afterwards.
-    Returns per-batch ingested-row counts."""
+    Returns per-batch ingested-row counts.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.pq import (
         encode_pq_federated,
         save_federated_pq_index,
@@ -1304,7 +1182,6 @@ def federated_pq_index_available_now(
 
     spark = stream.sparkSession
     history: list[int] = []
-    counter = _WriteCounter(compact_max_files or 8)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -1336,13 +1213,6 @@ def federated_pq_index_available_now(
                 id_col=id_col,
                 codes_col=codes_col,
             )
-        _maybe_compact(
-            spark, [f"{prefix}_codes"], len(history),
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
 
     _drain(stream, step, checkpoint_dir)
     return history
@@ -1361,8 +1231,6 @@ def federated_graph_index_available_now(
     centroid_id_col: str = "centroid_id",
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ) -> list[int]:
     """`graph_index_available_now` under per-collection quantizers —
     the graph member of the federated streaming set (IVF and PQ
@@ -1372,7 +1240,8 @@ def federated_graph_index_available_now(
     table) rewrite only the batch's tenants' partitions. The
     per-collection quantizer is FIXED for the stream's lifetime
     (rebuild-equivalence per tenant). Returns per-batch ingested-row
-    counts."""
+    counts.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.graphann import (
         assign_blocks_federated,
         block_pair_sims_federated,
@@ -1383,12 +1252,9 @@ def federated_graph_index_available_now(
 
     spark = stream.sparkSession
     history: list[int] = []
-    counter = _WriteCounter(compact_max_files or 8)
     vec_table = f"{prefix}_vectors"
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         from embeddingsearch_spark.storage import replace_bucketed
 
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -1410,15 +1276,6 @@ def federated_graph_index_available_now(
             replace_bucketed(
                 batch_df, vec_table, [id_col], n_buckets=n_buckets,
                 partition_cols=[partition_col],
-            )
-            _maybe_compact(
-                spark,
-                [f"{prefix}_pairs", f"{prefix}_assigned", vec_table],
-                len(history), compact_every, compact_max_files,
-                counter=counter,
-                touched=_touched_parts(
-                    batch_df, partition_col, compact_every
-                ),
             )
             return
         assigned_b = assign_blocks_federated(
@@ -1442,15 +1299,6 @@ def federated_graph_index_available_now(
             bucket_cols=[id_col], n_buckets=n_buckets,
             partition_cols=[partition_col],
         )
-        _maybe_compact(
-            spark,
-            [f"{prefix}_pairs", f"{prefix}_assigned", vec_table],
-            len(history), compact_every, compact_max_files,
-            counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
 
     _drain(stream, step, checkpoint_dir)
     return history
@@ -1466,8 +1314,6 @@ def federated_postings_index_available_now(
     tokenizer=None,
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ) -> list[int]:
     """`postings_index_available_now` over the TENANT-PARTITIONED
     layout — the lexical member of the federated streaming set
@@ -1478,7 +1324,8 @@ def federated_postings_index_available_now(
     never reads or writes another's postings files. The positional
     index streams identically through
     `upsert_partitioned_positions_index` (same contract). Returns
-    per-batch ingested-row counts."""
+    per-batch ingested-row counts.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.retrieval import (
         build_partitioned_postings_index,
         upsert_partitioned_postings_index,
@@ -1486,7 +1333,6 @@ def federated_postings_index_available_now(
 
     spark = stream.sparkSession
     history: list[int] = []
-    counter = _WriteCounter(compact_max_files or 8)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -1503,13 +1349,6 @@ def federated_postings_index_available_now(
                 id_col=id_col, text_col=text_col,
                 n_buckets=n_buckets, tokenizer=tokenizer,
             )
-        _maybe_compact(
-            spark, [table], len(history),
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
 
     _drain(stream, step, checkpoint_dir)
     return history
@@ -1529,8 +1368,6 @@ def monitored_federated_postings_ingest(
     tokenizer=None,
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ):
     """Drift-TRIGGERED maintenance for the MULTI-TENANT lexical index
     — the fourth federated monitored drain, closing the loop the
@@ -1558,7 +1395,8 @@ def monitored_federated_postings_ingest(
     and O(batch) per micro-batch — the persisted postings table is
     never rescanned for monitoring. Returns ``(history, flags)``:
     per-batch ``(batch_id, n_docs, {tenant: js})`` and
-    ``{tenant: bool}``."""
+    ``{tenant: bool}``.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.retrieval import (
         build_partitioned_postings_index,
         upsert_partitioned_postings_index,
@@ -1567,7 +1405,6 @@ def monitored_federated_postings_ingest(
     spark = stream.sparkSession
     reference = reference.localCheckpoint(eager=True)
     history: list[tuple] = []
-    counter = _WriteCounter(compact_max_files or 8)
     vocab = _RunningVocabFederated(
         reference, text_col, partition_col, vocab_size, smoothing
     )
@@ -1588,13 +1425,6 @@ def monitored_federated_postings_ingest(
                 id_col=id_col, text_col=text_col,
                 n_buckets=n_buckets, tokenizer=tokenizer,
             )
-        _maybe_compact(
-            spark, [table], len(history) + 1,
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
         jss = vocab.update(batch_df, text_col)
         for t, js in jss.items():
             if js is not None and js > threshold:
@@ -1621,8 +1451,6 @@ def monitored_federated_positions_ingest(
     tokenizer=None,
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ):
     """`monitored_federated_postings_ingest` for the POSITIONAL index
     — the same per-collection run-scoped vocabulary-drift signals
@@ -1633,7 +1461,8 @@ def monitored_federated_positions_ingest(
     lexical query shape (ranked, proximity-boosted, exact-phrase);
     the action is `retrain_federated_positions_tenants`. Returns
     ``(history, flags)``: per-batch ``(batch_id, n_docs,
-    {tenant: js})`` and ``{tenant: bool}``."""
+    {tenant: js})`` and ``{tenant: bool}``.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.retrieval import (
         build_partitioned_positions_index,
         upsert_partitioned_positions_index,
@@ -1642,7 +1471,6 @@ def monitored_federated_positions_ingest(
     spark = stream.sparkSession
     reference = reference.localCheckpoint(eager=True)
     history: list[tuple] = []
-    counter = _WriteCounter(compact_max_files or 8)
     vocab = _RunningVocabFederated(
         reference, text_col, partition_col, vocab_size, smoothing
     )
@@ -1663,13 +1491,6 @@ def monitored_federated_positions_ingest(
                 id_col=id_col, text_col=text_col,
                 n_buckets=n_buckets, tokenizer=tokenizer,
             )
-        _maybe_compact(
-            spark, [table], len(history) + 1,
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
         jss = vocab.update(batch_df, text_col)
         for t, js in jss.items():
             if js is not None and js > threshold:
@@ -1696,8 +1517,6 @@ def monitored_federated_ivf_ingest(
     skew_threshold: float = 4.0,
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ):
     """Drift-TRIGGERED maintenance for the MULTI-TENANT IVF index —
     `monitored_ivf_ingest`'s run-scoped O(batch) signals computed PER
@@ -1724,11 +1543,11 @@ def monitored_federated_ivf_ingest(
 
     Returns ``(history, flags)``: per-batch
     (batch_id, n_vecs, {tenant: shift}, {tenant: skew}) and
-    {tenant: bool} for every tenant seen this run."""
+    {tenant: bool} for every tenant seen this run.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     spark = stream.sparkSession
     reference = reference.localCheckpoint(eager=True)
     history: list[tuple] = []
-    counter = _WriteCounter(compact_max_files or 8)
     drift = _RunningDriftFederated(reference, vec_col, partition_col)
     state = {"flags": {}, "cents": None, "pops": None}
 
@@ -1784,13 +1603,6 @@ def monitored_federated_ivf_ingest(
                 partition_col=partition_col, n_buckets=n_buckets,
                 id_col=id_col, centroid_id_col=centroid_id_col,
             )
-        _maybe_compact(
-            spark, [f"{prefix}_assigned"], len(history) + 1,
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
         shifts = drift.update(batch_df, vec_col)
         skews = state["pops"].update(
             assigned_b, partition_col, centroid_id_col
@@ -1830,8 +1642,6 @@ def monitored_federated_pq_ingest(
     codes_col: str = "codes",
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ):
     """Drift-TRIGGERED maintenance for the MULTI-TENANT PQ index with
     the PQ-NATIVE signal per collection: every batch is encoded under
@@ -1853,7 +1663,8 @@ def monitored_federated_pq_ingest(
     index write on the CREATE path), one tenants-bounded (sum, count)
     aggregate; the persisted codes table is never rescanned for
     monitoring. Returns ``(history, flags)``: per-batch
-    (batch_id, n_vecs, {tenant: ratio}) and {tenant: bool}."""
+    (batch_id, n_vecs, {tenant: ratio}) and {tenant: bool}.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from pyspark.sql import functions as F
 
     from embeddingsearch_spark.operators.pq import (
@@ -1862,12 +1673,10 @@ def monitored_federated_pq_ingest(
         save_federated_pq_index,
         upsert_federated_pq_index,
     )
-    from embeddingsearch_spark.sink import PartitionOverwriteSink
 
     spark = stream.sparkSession
     reference = reference.localCheckpoint(eager=True)
     history: list[tuple] = []
-    counter = _WriteCounter(compact_max_files or 8)
     state = {
         "cbs": None, "ref_mean": None,
         "sum": {}, "n": {}, "flags": {},
@@ -1927,13 +1736,6 @@ def monitored_federated_pq_ingest(
                 n_buckets=n_buckets, id_col=id_col,
                 codes_col=codes_col,
             )
-        _maybe_compact(
-            spark, [f"{prefix}_codes"], len(history) + 1,
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
         ratios = {}
         for r in (
             coded.groupBy(partition_col)
@@ -1987,8 +1789,6 @@ def monitored_federated_graph_ingest(
     skew_threshold: float = 4.0,
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ):
     """Drift-TRIGGERED maintenance for the MULTI-TENANT graph index —
     the third federated monitored drain (IVF and PQ above, completing
@@ -2008,7 +1808,8 @@ def monitored_federated_graph_ingest(
     (required — the graph family's coarse quantizer is caller-owned).
     Returns ``(history, flags)``: per-batch
     (batch_id, n_vecs, {tenant: shift}, {tenant: skew}) and
-    {tenant: bool}."""
+    {tenant: bool}.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from pyspark.sql import functions as F
 
     from embeddingsearch_spark.operators.graphann import (
@@ -2025,7 +1826,6 @@ def monitored_federated_graph_ingest(
     centroids = centroids.localCheckpoint(eager=True)
     vec_table = f"{prefix}_vectors"
     history: list[tuple] = []
-    counter = _WriteCounter(compact_max_files or 8)
     drift = _RunningDriftFederated(reference, vec_col, partition_col)
     n_cells_by = {
         str(r[0]): int(r[1])
@@ -2074,15 +1874,6 @@ def monitored_federated_graph_ingest(
                 bucket_cols=[id_col], n_buckets=n_buckets,
                 partition_cols=[partition_col],
             )
-        _maybe_compact(
-            spark,
-            [f"{prefix}_pairs", f"{prefix}_assigned", vec_table],
-            len(history) + 1, compact_every, compact_max_files,
-            counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
         shifts = drift.update(batch_df, vec_col)
         skews = pops.update(assigned_b, partition_col, "_blk")
         for t in set(shifts) | set(skews):
@@ -2120,8 +1911,6 @@ def federated_ivf_sq8_index_available_now(
     centroid_id_col: str = "centroid_id",
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
     codes_dtype: str = "int",
 ) -> list[int]:
     """`federated_ivf_index_available_now` for the COMPRESSED layout:
@@ -2135,7 +1924,8 @@ def federated_ivf_sq8_index_available_now(
     ``codes_dtype`` applies on the CREATING run only ("sq4" drains
     into the packed 4-bit layout); maintenance batches re-encode in
     whatever layout the existing generation carries (the upsert is
-    layout-detected). Returns per-batch ingested-row counts."""
+    layout-detected). Returns per-batch ingested-row counts.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from embeddingsearch_spark.operators.ann import (
         assign_centroids_federated,
     )
@@ -2146,7 +1936,6 @@ def federated_ivf_sq8_index_available_now(
 
     spark = stream.sparkSession
     history: list[int] = []
-    counter = _WriteCounter(compact_max_files or 8)
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.localCheckpoint(eager=True)
@@ -2178,13 +1967,6 @@ def federated_ivf_sq8_index_available_now(
                 centroid_id_col=centroid_id_col,
                 codes_dtype=codes_dtype,
             )
-        _maybe_compact(
-            spark, [f"{prefix}_codes"], len(history),
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
 
     _drain(stream, step, checkpoint_dir)
     return history
@@ -2228,8 +2010,6 @@ def monitored_federated_ivf_sq8_ingest(
     clamp_threshold: float = 0.05,
     checkpoint_dir: str | None = None,
     sink=None,
-    compact_every: int | str | None = None,
-    compact_max_files: int | None = None,
 ):
     """Drift-TRIGGERED maintenance for the COMPRESSED multi-tenant IVF
     index — `monitored_federated_ivf_ingest`'s per-collection
@@ -2253,7 +2033,8 @@ def monitored_federated_ivf_sq8_ingest(
     {tenant: bool}. A flagged tenant's action arm is the retrain
     path: re-train ranges + quantizer on its current corpus and
     rebuild THAT tenant (`sq8_stats` + `save/upsert` scoped to it),
-    exactly like the raw family's single-tenant retrain."""
+    exactly like the raw family's single-tenant retrain.
+    An appending ``sink=`` (`MergeSink`) needs compact_index_table/OPTIMIZE."""
     from pyspark.sql import functions as F
 
     from embeddingsearch_spark.operators.ann import (
@@ -2269,7 +2050,6 @@ def monitored_federated_ivf_sq8_ingest(
     spark = stream.sparkSession
     reference = reference.localCheckpoint(eager=True)
     history: list[tuple] = []
-    counter = _WriteCounter(compact_max_files or 8)
     drift = _RunningDriftFederated(reference, vec_col, partition_col)
     state = {"flags": {}, "cents": None, "stats": None, "pops": None}
 
@@ -2320,13 +2100,6 @@ def monitored_federated_ivf_sq8_ingest(
                 n_buckets=n_buckets, id_col=id_col, vec_col=vec_col,
                 codes_col=codes_col, centroid_id_col=centroid_id_col,
             )
-        _maybe_compact(
-            spark, [f"{prefix}_codes"], len(history) + 1,
-            compact_every, compact_max_files, counter=counter,
-            touched=_touched_parts(
-                batch_df, partition_col, compact_every
-            ),
-        )
         # clamp rate over the BATCH's own codes (O(batch), array-level
         # aggregate — no explode). A zero-span (constant/padded)
         # dimension always encodes to 0 and reconstructs EXACTLY, so a

@@ -2327,13 +2327,13 @@ FROM ({_phrase_tenant_sql()})"""
 def q_compacted_index_serve(spark, sf_dir):
     """Index lifecycle end-to-end: build the tenant-partitioned
     postings index from MOST of the corpus, ship the holdout through
-    several small partitioned upserts (the fragmentation pattern of a
-    long-lived streaming ingest — each batch lands its own file set in
-    the touched cells), then run `storage.compact_index_table`
-    (rewrites only over-bound partitions, preserves bucketing and
-    hive layout) and serve routed BM25 from the compacted table.
-    Compaction changes file counts, never rows — the serve shares
-    `bm25_tenant_serve`'s oracle verbatim, which is the gate's point."""
+    several small partitioned upserts (each leaves its cells at one
+    file per bucket, so the compactor's bucket-count floor finds
+    nothing to rewrite; appended tables are what it compacts), then
+    run `storage.compact_index_table` and serve routed BM25 from the
+    result. Compaction changes file counts, never rows — the serve
+    shares `bm25_tenant_serve`'s oracle verbatim, which is the gate's
+    point."""
     from embeddingsearch_spark.storage import compact_index_table
 
     docs = _corpus(spark, sf_dir)

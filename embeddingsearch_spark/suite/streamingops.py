@@ -410,12 +410,10 @@ def q_streaming_tpostings_index(spark, sf_dir):
         return realistic_text(stream)
 
     federated_postings_index_available_now(
-        half(0), table, partition_col="source", n_buckets=8,
-        compact_every="auto",
+        half(0), table, partition_col="source", n_buckets=8
     )
     federated_postings_index_available_now(
-        half(1), table, partition_col="source", n_buckets=8,
-        compact_every="auto",
+        half(1), table, partition_col="source", n_buckets=8
     )
     docs = _corpus(spark, sf_dir)
     queries = _text_queries(spark, sf_dir, docs)
@@ -638,7 +636,7 @@ def q_streaming_tivf_index(spark, sf_dir):
         )
         federated_ivf_index_available_now(
             stream, prefix, centroids, partition_col="source",
-            n_buckets=4, compact_every="auto",
+            n_buckets=4,
         )
 
     drain(F.col("vec_id") % 5 != 0)
@@ -813,7 +811,7 @@ def q_streaming_tpq_index(spark, sf_dir):
         )
         federated_pq_index_available_now(
             stream, prefix, cbs_by, partition_col="source",
-            n_buckets=4, compact_every="auto",
+            n_buckets=4,
         )
 
     drain(F.col("vec_id") % 5 != 0)
@@ -876,7 +874,7 @@ def q_streaming_tgraph_index(spark, sf_dir):
         )
         federated_graph_index_available_now(
             stream, prefix, cents, partition_col="source",
-            m=8, n_assign=2, n_buckets=4, compact_every="auto",
+            m=8, n_assign=2, n_buckets=4,
         )
 
     drain(F.col("vec_id") % 5 != 0)
@@ -2182,7 +2180,7 @@ def q_streaming_tivf_sq8_index(spark, sf_dir):
         )
         federated_ivf_sq8_index_available_now(
             stream, prefix, centroids=centroids, stats=stats,
-            partition_col="source", n_buckets=4, compact_every="auto",
+            partition_col="source", n_buckets=4,
         )
 
     drain(F.col("vec_id") % 5 != 0)
@@ -2261,7 +2259,7 @@ def q_streaming_tivf_sq4_index(spark, sf_dir):
         )
         federated_ivf_sq4_index_available_now(
             stream, prefix, centroids=centroids, stats=stats,
-            partition_col="source", n_buckets=4, compact_every="auto",
+            partition_col="source", n_buckets=4,
         )
 
     drain(F.col("vec_id") % 5 != 0)

@@ -247,12 +247,14 @@ def literal_frame(spark, rows, schema):
     parses to a LocalTableScan: broadcast builds read it driver-side
     with ZERO tasks and zero Python round-trips, at any reference
     count. Supports the bounded-collect row shapes the serve paths
-    re-create (ints, floats, strings, bools, None); ``schema`` is a
-    DDL string or StructType whose declared types the literals are
-    CAST to, so the result frame's schema matches createDataFrame's.
+    re-create (ints, floats incl. ±inf/NaN, strings, bools, None);
+    ``schema`` is a DDL string or StructType whose declared types the
+    literals are CAST to, so the frame's schema matches createDataFrame's.
 
     Falls back to createDataFrame for empty row sets (VALUES needs at
     least one tuple) — an empty frame is referenced, never scanned."""
+    import math
+
     from pyspark.sql import types as T
 
     if isinstance(schema, str):
@@ -268,6 +270,10 @@ def literal_frame(spark, rows, schema):
         if isinstance(v, str):
             return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
         if isinstance(v, float):
+            if math.isnan(v):
+                return "double('NaN')"
+            if math.isinf(v):
+                return f"double('{'-' if v < 0 else ''}Infinity')"
             # repr round-trips doubles exactly
             return f"CAST('{v!r}' AS DOUBLE)"
         if isinstance(v, int):

@@ -179,7 +179,6 @@ def main(sf_dir: str = "/root/testdata/sf0.001", spark=None) -> dict:
         _, flags = monitored_federated_ivf_ingest(
             stream, "es_ex_fiv1", emb, partition_col="source",
             n_buckets=4, drift_threshold=0.1, skew_threshold=4.0,
-            compact_every="auto",
         )
     out["flagged"] = sorted(flags)
     print(f"[5] monitored drain flagged: {out['flagged']}")

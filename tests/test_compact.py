@@ -199,3 +199,71 @@ def test_compact_index_table_adaptive_bound(spark):
         spark, table, max_files_per_partition=None
     )
     assert again["partitions_compacted"] == 0
+
+
+def test_compact_index_table_skips_bucket_granular_partitions(spark):
+    """Partitions written by upserts hold one file per bucket, which is
+    as compact as a bucketed table gets: with a bound under the bucket
+    count, compaction rewrites none of them (files byte-identical),
+    while a partition fragmented by appends still compacts."""
+    import glob
+
+    from embeddingsearch_spark.operators import retrieval
+    from embeddingsearch_spark.storage import (
+        compact_index_table,
+        drop_table,
+    )
+
+    table = "es_test_compact_upserted"
+    drop_table(spark, table)
+    docs = spark.createDataFrame(
+        [
+            (i, f"tok{i % 5} common word{i}", ["acme", "globex"][i % 2])
+            for i in range(40)
+        ],
+        "doc_id long, text string, source string",
+    )
+    retrieval.build_partitioned_postings_index(
+        docs.filter(F.col("doc_id") < 30), table,
+        partition_col="source", n_buckets=4,
+    )
+    retrieval.upsert_partitioned_postings_index(
+        spark, table, docs.filter(F.col("doc_id") >= 30),
+        partition_col="source", n_buckets=4,
+    )
+    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
+
+    def listing(src):
+        return sorted(
+            (os.path.basename(p), os.path.getsize(p))
+            for p in glob.glob(
+                os.path.join(wh, table, f"source={src}", "*")
+            )
+            if not os.path.basename(p).startswith(("_", "."))
+        )
+
+    before = {src: listing(src) for src in ("acme", "globex")}
+    # over the requested bound of 2, at the table's 4 buckets
+    assert all(2 < len(v) <= 4 for v in before.values()), before
+    stats = compact_index_table(spark, table, max_files_per_partition=2)
+    assert stats["partitions_compacted"] == 0
+    assert {src: listing(src) for src in ("acme", "globex")} == before
+
+    cols = spark.table(table).columns
+    template = (
+        spark.table(table)
+        .filter(F.col("source") == "acme")
+        .limit(1)
+        .localCheckpoint(eager=True)
+    )
+    for j in range(3):
+        template.withColumn(
+            "doc_id", F.lit(1000 + j).cast("long")
+        ).select(*cols).repartition(1).write.mode("append").insertInto(
+            table
+        )
+    assert len(listing("acme")) > 4
+    stats = compact_index_table(spark, table, max_files_per_partition=2)
+    assert stats["partitions_compacted"] == 1
+    assert len(listing("acme")) <= 4
+    assert listing("globex") == before["globex"]

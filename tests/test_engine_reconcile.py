@@ -15,10 +15,10 @@ INGEST_SCHEMA = (
 )
 
 
-def _rows(spark, texts: dict[str, str]):
+def _rows(spark, texts: dict[str, str], domain: str = "sd"):
     return spark.createDataFrame(
         [
-            ("sd", ent, "Mean", None, "text", "Mean", "Cosine", txt,
+            (domain, ent, "Mean", None, "text", "Mean", "Cosine", txt,
              ["mock:modelA"])
             for ent, txt in texts.items()
         ],
@@ -62,6 +62,33 @@ def test_reconcile_after_update_insert_delete(spark):
         assert _cached(eng, q) == _full(eng, q), q
     assert all(r.entity != "e1" for r in eng.read_results("alpha probe").collect())
     assert eng.cached_queries().count() == 2
+
+
+def test_reconcile_touches_only_materialized_domains(spark):
+    """An upsert re-scores a query only in the domains that materialized
+    it: a domain that never materialized the query, and a
+    ``cache_reconciliation=False`` domain whose results the upsert just
+    invalidated, both stay without rows for it."""
+    from embeddingsearch_spark.api import SearchdomainSettings
+
+    eng = Engine(spark, dim=8)
+    eng.create_searchdomain(
+        "sd_off", SearchdomainSettings(cache_reconciliation=False)
+    )
+    eng.index_entities(_rows(spark, {"a1": "a1 text", "a2": "a2 more"}, "sdA"))
+    eng.index_entities(_rows(spark, {"o1": "off one"}, "sd_off"))
+    eng.materialize_query("a1 text")  # every domain present: sdA, sd_off
+    eng.index_entities(_rows(spark, {"b1": "b1 text"}, "sdB"))
+    eng.index_entities(_rows(spark, {"o2": "off two"}, "sd_off"))
+    got = {
+        (r["searchdomain"], r["entity"])
+        for r in eng.query_results.collect()
+    }
+    assert got == {("sdA", "a1"), ("sdA", "a2")}, got
+    assert _cached(eng, "a1 text") == sorted(
+        map(tuple, eng.search("a1 text", "sdA").select(
+            "searchdomain", "entity", "score", "rank").collect())
+    )
 
 
 def test_reconcile_is_set_based_at_1k_queries(spark):

@@ -188,10 +188,10 @@ def test_query_results_persist_and_selectively_rewrite(eng, spark, tmp_path):
 
 
 def test_incremental_save_after_load_keeps_loaded_tables(eng, spark, tmp_path):
-    """A loaded Engine's index_flat is a lazy scan of the files the next
-    incremental save rewrites: the save pins it first, so the save
-    succeeds, the Engine still searches, and the materialized query
-    reaches disk."""
+    """A loaded Engine's tables are lazy scans of the files the next
+    save rewrites: both the incremental and the full save pin them
+    first, so the save succeeds, the Engine still searches, and the
+    materialized query reaches disk."""
     root = str(tmp_path / "db")
     eng.save(root)
     e2 = Engine(spark, dim=8)
@@ -211,6 +211,17 @@ def test_incremental_save_after_load_keeps_loaded_tables(eng, spark, tmp_path):
         )
     ) == _sorted_rows(e2.query_results)
     assert e3.query_results.count() == 2
+    cache = _sorted_rows(e3.embedding_cache)
+
+    e3.save(root, incremental=False)
+    assert e3.search("a1 text text", searchdomain="sdA").count() == 2
+    e4 = Engine(spark, dim=8)
+    e4.load(root)
+    assert _sorted_rows(e4.index_flat.select(*eng.index_flat.columns)) == (
+        _sorted_rows(eng.index_flat)
+    )
+    assert _sorted_rows(e4.embedding_cache) == cache
+    assert e4.query_results.count() == 2
 
 
 def test_save_to_new_path_is_full_write(eng, spark, tmp_path):

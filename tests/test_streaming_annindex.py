@@ -514,15 +514,39 @@ def test_monitor_signals_are_run_scoped_o_batch(spark, tmp_path):
     assert g2[-1][3] == want_skew, (g2[-1], want_skew)
 
 
-def test_federated_drain_auto_compaction_bounds_files(spark, tmp_path):
-    """File counts stay bounded across >=3 federated drains, with and
-    without `compact_index_table` every N micro-batches, and the
-    maintained index is row-identical either way (compaction changes
-    costs, never results). The clustered sink writes one file per
-    (partition dir, bucket) cell on every drain, so even the uncompacted
-    run never holds more than ``n_buckets`` files in a partition dir."""
+def assert_cells_bounded(spark, table, n_buckets):
+    """Every leaf directory of ``table`` holds at most ``n_buckets``
+    data files — the clustered writers' invariant that keeps a
+    streamed index at bucket granularity without compaction. Returns
+    {leaf dir relative to the table: file count}."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
+    loc = os.path.join(wh, table)
+    counts = {}
+    for root, _, names in os.walk(loc):
+        data = [
+            n
+            for n in names
+            if not n.startswith(("_", ".")) and not n.endswith(".crc")
+        ]
+        if data:
+            counts[os.path.relpath(root, loc)] = len(data)
+    assert counts, table
+    assert max(counts.values()) <= n_buckets, (table, counts)
+    return counts
+
+
+def test_federated_ivf_drain_keeps_cells_at_n_buckets_files(
+    spark, tmp_path
+):
+    """Three federated IVF micro-batches leave every (source,
+    centroid) cell at <= ``n_buckets`` files with no compaction step:
+    each write replaces the cells it touches with one file per bucket.
+    The maintained index holds every streamed row in its own cell."""
     import numpy as np
 
+    from embeddingsearch_spark.operators.ann import (
+        assign_centroids_federated,
+    )
     from embeddingsearch_spark.storage import drop_table
     from embeddingsearch_spark.streaming.annindex import (
         federated_ivf_index_available_now,
@@ -546,70 +570,33 @@ def test_federated_drain_auto_compaction_bounds_files(spark, tmp_path):
         ],
         "source string, centroid_id long, embedding array<double>",
     )
-
-    def drain(prefix, subdir, **kw):
-        for t in ("_assigned", "_centroids"):
-            drop_table(spark, prefix + t)
-        src = os.path.join(str(tmp_path), subdir)
-        for b in range(3):
-            spark.createDataFrame(
-                rows[b * 40 : (b + 1) * 40], schema
-            ).coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        h = federated_ivf_index_available_now(
-            stream, prefix, centroids=cents, n_buckets=2, **kw
-        )
-        assert len(h) == 3 and sum(h) == 120
-
-    def file_counts(prefix):
-        wh = spark.conf.get("spark.sql.warehouse.dir").replace(
-            "file:", ""
-        )
-        counts = {}
-        for root, _, names in os.walk(
-            os.path.join(wh, prefix + "_assigned")
-        ):
-            data = [
-                n
-                for n in names
-                if not n.startswith(("_", "."))
-                and not n.endswith(".crc")
-            ]
-            if data:
-                counts[os.path.relpath(root, wh)] = len(data)
-        return counts
-
-    drain("es_test_drain_nc", "nc")
-    drain(
-        "es_test_drain_cc", "cc", compact_every=1, compact_max_files=2
+    prefix = "es_test_drain_cells"
+    for t in ("_assigned", "_centroids"):
+        drop_table(spark, prefix + t)
+    h = federated_ivf_index_available_now(
+        _multi_file_source(spark, tmp_path, rows, schema, 3),
+        prefix, centroids=cents, n_buckets=2,
     )
-    nc, cc = file_counts("es_test_drain_nc"), file_counts(
-        "es_test_drain_cc"
-    )
-    # every (source, centroid) dir of both runs, each holding at most
-    # n_buckets files after 3 drains
-    cells = {
+    assert len(h) == 3 and sum(h) == 120
+    counts = assert_cells_bounded(spark, prefix + "_assigned", 2)
+    assert set(counts) == {
         f"source={t}/centroid_id={c}" for t in ("a", "b") for c in range(4)
-    }
-    for prefix, counts in (("es_test_drain_nc", nc), ("es_test_drain_cc", cc)):
-        assert {
-            os.path.relpath(d, prefix + "_assigned") for d in counts
-        } == cells, counts
-        assert max(counts.values()) <= 2, counts
-    # results unchanged: same assigned rows either way
-    a = sorted(
-        (r["vec_id"], r["centroid_id"])
-        for r in spark.table("es_test_drain_nc_assigned").collect()
+    }, counts
+    got = sorted(
+        tuple(r)
+        for r in spark.table(prefix + "_assigned")
+        .select("vec_id", "centroid_id")
+        .collect()
     )
-    b = sorted(
-        (r["vec_id"], r["centroid_id"])
-        for r in spark.table("es_test_drain_cc_assigned").collect()
+    want = sorted(
+        tuple(r)
+        for r in assign_centroids_federated(
+            spark.createDataFrame(rows, schema), cents
+        )
+        .select("vec_id", "centroid_id")
+        .collect()
     )
-    assert a == b and len(a) == 120
+    assert got == want and len(got) == 120
 
 
 def test_monitored_federated_ivf_per_tenant_flags(spark, tmp_path):
@@ -761,13 +748,15 @@ def test_monitored_federated_pq_per_tenant_ratios(spark, tmp_path):
     assert (
         spark.table("es_test_mon_fpq_codes").count() == 120
     )
+    assert_cells_bounded(spark, "es_test_mon_fpq_codes", 2)
 
 
-def test_monitored_federated_ingests_take_compact_knob(spark, tmp_path):
-    """The monitored federated drains accept the same in-stream
-    compaction knob as the plain drains: a compact_every=1 run keeps
-    the maintained tables row-complete (compaction changes costs,
-    never rows)."""
+def test_monitored_federated_ingests_row_complete_and_bounded(
+    spark, tmp_path
+):
+    """The monitored federated IVF, PQ and graph drains keep their
+    maintained tables row-complete across micro-batches, with every
+    cell at <= ``n_buckets`` files."""
     import math
 
     from embeddingsearch_spark.operators import pq as pq_ops
@@ -803,19 +792,20 @@ def test_monitored_federated_ingests_take_compact_knob(spark, tmp_path):
     h, _ = monitored_federated_ivf_ingest(
         stream("i"), "es_test_cmpk_ivf", ref, centroids=cents,
         n_buckets=2, drift_threshold=1e9, skew_threshold=1e9,
-        compact_every=1, compact_max_files=2,
     )
     assert len(h) == 2
     assert spark.table("es_test_cmpk_ivf_assigned").count() == 40
+    assert_cells_bounded(spark, "es_test_cmpk_ivf_assigned", 2)
 
     cbs = pq_ops.initial_codebooks_federated(ref, m_sub=2, k_codes=4)
     for t in ("_codes", "_codebooks"):
         drop_table(spark, "es_test_cmpk_pq" + t)
     monitored_federated_pq_ingest(
         stream("p"), "es_test_cmpk_pq", ref, codebooks_by=cbs,
-        n_buckets=2, compact_every=1, compact_max_files=2,
+        n_buckets=2,
     )
     assert spark.table("es_test_cmpk_pq_codes").count() == 40
+    assert_cells_bounded(spark, "es_test_cmpk_pq_codes", 2)
 
     for t in ("_pairs", "_assigned", "_vectors"):
         drop_table(spark, "es_test_cmpk_g" + t)
@@ -823,9 +813,10 @@ def test_monitored_federated_ingests_take_compact_knob(spark, tmp_path):
         stream("g"), "es_test_cmpk_g", cents, ref,
         m=4, n_assign=1, n_buckets=2,
         drift_threshold=1e9, skew_threshold=1e9,
-        compact_every=1, compact_max_files=2,
     )
     assert spark.table("es_test_cmpk_g_assigned").count() == 40
+    for t in ("_pairs", "_assigned", "_vectors"):
+        assert_cells_bounded(spark, "es_test_cmpk_g" + t, 2)
 
 
 def test_graph_drain_checkpoints_only_affected_blocks(spark, tmp_path):
@@ -992,6 +983,8 @@ def test_federated_graph_drain_prunes_by_tenant_and_block(
     finally:
         sann._affected_vectors = orig
     assert seen == [expected], (seen, expected, len(base))
+    for t in ("_pairs", "_assigned", "_vectors"):
+        assert_cells_bounded(spark, "es_test_faffblk" + t, 2)
 
 
 def test_monitored_federated_postings_per_tenant_flags(
@@ -1082,6 +1075,7 @@ def test_monitored_federated_postings_per_tenant_flags(
     assert (
         spark.table(table).select("doc_id").distinct().count() == 36
     )
+    assert_cells_bounded(spark, table, 2)
 
 
 def test_retrain_federated_postings_partition_swap(spark):
@@ -1213,91 +1207,6 @@ def test_global_drains_route_through_injected_sink(spark, tmp_path):
         s4, "es_test_sinkdrain_post", n_buckets=2, sink=pspy
     )
     assert pspy.calls == ["es_test_sinkdrain_post"], pspy.calls
-
-
-def test_write_count_driven_compaction_trigger(spark, tmp_path):
-    """Round-8 judge item #5: ``compact_every="auto"`` fires
-    compaction from the drain's OWN write counts — when a partition
-    has accrued ``compact_max_files`` writes since its last
-    compaction — and never for quiet partitions (no periodic listing,
-    no fixed cadence). The counter unit-behaviour plus the in-drain
-    integration: a hot tenant's partition compacts, the quiet
-    tenant's files stay byte-identical."""
-    from embeddingsearch_spark import storage as storage_mod
-    from embeddingsearch_spark.storage import drop_table
-    from embeddingsearch_spark.streaming.annindex import (
-        _WriteCounter,
-        federated_postings_index_available_now,
-    )
-    from tests.test_lifecycle import _listing
-
-    # counter semantics: due only at the bound, quiet keys never due
-    c = _WriteCounter(3)
-    c.record("t", [("a",)])
-    c.record("t", [("a",), ("b",)])
-    assert not c.due("t")
-    c.record("t", [("a",)])  # a hits 3
-    assert c.due("t") and not c.due("other")
-    c.reset("t")
-    assert not c.due("t")
-
-    # reset_due (what the trigger calls) keeps UNDER-bound partitions'
-    # accrued counts — the table-wide wipe pushed their compaction a
-    # full bound of extra writes past intent (round-8 ADVICE)
-    c2 = _WriteCounter(3)
-    c2.record("t", [("a",), ("b",)])
-    c2.record("t", [("a",), ("b",)])
-    c2.record("t", [("a",)])  # a at 3, b at 2
-    assert c2.due("t")
-    c2.reset_due("t")
-    assert not c2.due("t")
-    assert c2.writes == {("t", ("b",)): 2}, c2.writes
-    c2.record("t", [("b",)])
-    assert c2.due("t")  # b fires on its true 3rd write, not 3 more
-
-    calls = []
-    orig = storage_mod.compact_index_table
-
-    def spy(spark_, table, max_files_per_partition=4, **kw):
-        calls.append(table)
-        return orig(
-            spark_, table,
-            max_files_per_partition=max_files_per_partition, **kw,
-        )
-
-    schema = "doc_id long, text string, source string"
-    table = "es_test_autocmp"
-    drop_table(spark, table)
-    # batch 1 touches hot+quiet; batches 2..4 hot only
-    rows = [(1, "alpha beta", "hot"), (2, "gamma delta", "quiet")] + [
-        (10 + i, f"word{i} filler text", "hot") for i in range(3)
-    ]
-    stream = _multi_file_source(spark, tmp_path, rows, schema, 4)
-    storage_mod.compact_index_table = spy
-    try:
-        federated_postings_index_available_now(
-            stream, table, partition_col="source", n_buckets=2,
-            compact_every="auto", compact_max_files=3,
-        )
-    finally:
-        storage_mod.compact_index_table = orig
-    # hot accrued 4 writes (bound 3) -> fired at least once; the
-    # quiet partition alone could never have triggered it
-    assert calls and all(t == table for t in calls), calls
-    quiet_before = _listing(spark, table, "quiet")
-    assert quiet_before  # exists and was never rewritten after batch 1
-
-    # a further hot-only run with auto mode: quiet stays byte-identical
-    s2 = _multi_file_source(
-        spark, os.path.join(str(tmp_path), "more"),
-        [(100 + i, "more hot words here", "hot") for i in range(3)],
-        schema, 3,
-    )
-    federated_postings_index_available_now(
-        s2, table, partition_col="source", n_buckets=2,
-        compact_every="auto", compact_max_files=3,
-    )
-    assert _listing(spark, table, "quiet") == quiet_before
 
 
 def test_federated_drains_route_through_injected_sink(spark, tmp_path):
@@ -1436,6 +1345,7 @@ def test_monitored_federated_positions_flags_and_swap(spark, tmp_path):
     assert set(spark.table(table).columns) == {
         "doc_id", "source", "pos", "term"
     }
+    assert_cells_bounded(spark, table, 2)
 
     # swap globex only: doc 1001 vanished, rest re-tokenized under a
     # coarser corpus; acme's files byte-identical

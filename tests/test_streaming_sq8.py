@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from embeddingsearch_spark.operators import ann as ann_ops
 from embeddingsearch_spark.operators import sq
 from embeddingsearch_spark.storage import drop_table
+from tests.test_streaming_annindex import assert_cells_bounded
 
 SCHEMA = "vec_id long, embedding array<double>, source string"
 
@@ -68,6 +69,7 @@ def test_streaming_sq8_converges_to_batch_build(spark, tmp_path):
         stream, prefix, centroids=cents, stats=stats, n_buckets=2
     )
     assert len(history) >= 2 and sum(history) == len(rows)
+    assert_cells_bounded(spark, prefix + "_codes", 2)
     got = sorted(
         (r["vec_id"], r["source"], r["centroid_id"], tuple(r["codes"]))
         for r in spark.table(prefix + "_codes").collect()
@@ -145,3 +147,4 @@ def test_monitored_sq8_clamp_flags_drifted_tenant_only(spark, tmp_path):
     assert h2[-1][4]["globex"] > 0.3, h2[-1][4]
     # the index kept updating for BOTH tenants
     assert spark.table(prefix + "_codes").count() == 600
+    assert_cells_bounded(spark, prefix + "_codes", 2)
