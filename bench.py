@@ -49,6 +49,23 @@ BUILD_QUERIES = build_query_names()
 SETUP_SERVE = setup_serve_pairs()
 
 
+def round_label(repo_dir: str) -> int:
+    """The round this run belongs to: one CORRECTNESS_r<N>.json is
+    committed per completed round, so the next round is the largest N
+    plus one (a file count would mislabel after a gap or a stray file;
+    the BENCH_r*.json glob also matches per-cpu extras like
+    BENCH_r12_c8.json)."""
+    import glob
+    import re
+
+    rounds = [
+        int(m.group(1))
+        for p in glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json"))
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(p)))
+    ]
+    return max(rounds, default=0) + 1
+
+
 def _partitions_for(sf_dir: str, target_mb: int = 64) -> int:
     """Size shuffle partitions from the data, not the core count: one
     partition per ~64 MB of input, clamped to [cpus/4, 4*cpus]. At sf0.1
@@ -291,12 +308,7 @@ def main() -> None:
     # cross-run/cross-round archive (additions only — nothing else
     # reads them).
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 0))
-    # round label: one CORRECTNESS_r*.json is committed per completed
-    # round (the BENCH_r*.json glob above also matches per-cpu extras
-    # like BENCH_r12_c8.json, so it over-counts)
-    this_round = len(
-        glob.glob(os.path.join(repo_dir, "CORRECTNESS_r*.json"))
-    ) + 1
+    this_round = round_label(repo_dir)
     keyed = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         f"BENCH_LOCAL_r{this_round}_c{cpus}.json",

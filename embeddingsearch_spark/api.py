@@ -287,11 +287,15 @@ class Engine:
         provider = provider if provider is not None else self.provider
         models = self.models_in_use()
         if provider is None:
+            # embed the projected column, not the literal: the embedder's
+            # tree then does not depend on the query text
             queries = models.select(
-                F.lit(query).alias("query"),
+                F.lit(query).alias("query"), "model"
+            ).select(
+                "query",
                 "model",
                 deterministic_embedding(
-                    F.lit(query), F.col("model"), self.dim
+                    F.col("query"), F.col("model"), self.dim
                 ).alias("vector"),
             )
         else:

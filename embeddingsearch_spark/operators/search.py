@@ -26,10 +26,18 @@ SortMergeJoin).
 
 topN is applied at read time over the full ranking (declared deviation from
 the reference's stale-truncated query cache — SURVEY.md §2.6).
+
+Plan construction is a cost: the similarity dispatch and the two folds
+are query-independent Column trees of thousands of nodes, and building
+one node is one py4j round trip. They are built once per JVM gateway
+(:func:`_cascade_column`) and reused by every search and reconcile.
 """
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -39,6 +47,34 @@ from embeddingsearch_spark.functions.probmethods import (
     probmethod_dispatch_agg,
 )
 from embeddingsearch_spark.functions.similarity import similarity_dispatch
+
+# The cascade's query-independent Columns, by the name of the column each
+# one becomes; every input is a fixed column of the cascade's frames.
+_CASCADE = {
+    "sim": lambda: similarity_dispatch(
+        F.col("simmethod"), F.col("vector"), F.col("qvec")
+    ),
+    "w": lambda: dwa_weight(F.col("dp_probmethod"), F.col("model")),
+    "dp_score": lambda: probmethod_dispatch_agg(
+        F.col("sim"), F.col("dp_probmethod"), F.col("w")
+    ),
+    "w2": lambda: dwa_weight(F.col("entity_probmethod"), F.col("datapoint")),
+    "score": lambda: probmethod_dispatch_agg(
+        F.col("dp_score"), F.col("entity_probmethod"), F.col("w2")
+    ),
+}
+
+
+@functools.lru_cache(maxsize=4 * len(_CASCADE))
+def _built(gateway, name: str) -> Column:
+    return _CASCADE[name]()
+
+
+def _cascade_column(name: str) -> Column:
+    """The cascade Column ``name``, built on first use. Keyed on the live
+    gateway: a Column holds a JVM object, so a restarted gateway builds
+    its own instead of reusing a dead one."""
+    return _built(SparkContext._gateway, name)
 
 
 def score_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
@@ -53,7 +89,6 @@ def score_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
         queries.select(*keys, "query", F.col("vector").alias("qvec"))
     )
     j = corpus.join(q, keys, "inner")
-    sim = similarity_dispatch(F.col("simmethod"), F.col("vector"), F.col("qvec"))
     return j.select(
         "searchdomain",
         "entity",
@@ -62,16 +97,15 @@ def score_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
         "dp_probmethod",
         "model",
         "query",
-        sim.alias("sim"),
+        _cascade_column("sim").alias("sim"),
     )
 
 
 def datapoint_scores(scored: DataFrame) -> DataFrame:
     """First fold: per (entity, datapoint, query), fold per-model sims with
     the datapoint's probmethod (reference Searchdomain.cs:247-255)."""
-    w = dwa_weight(F.col("dp_probmethod"), F.col("model"))
     return (
-        scored.withColumn("w", w)
+        scored.withColumn("w", _cascade_column("w"))
         .groupBy(
             "searchdomain",
             "entity",
@@ -80,26 +114,17 @@ def datapoint_scores(scored: DataFrame) -> DataFrame:
             "datapoint",
             "dp_probmethod",
         )
-        .agg(
-            probmethod_dispatch_agg(
-                F.col("sim"), F.col("dp_probmethod"), F.col("w")
-            ).alias("dp_score")
-        )
+        .agg(_cascade_column("dp_score").alias("dp_score"))
     )
 
 
 def entity_scores(dp_scores: DataFrame) -> DataFrame:
     """Second fold: per (entity, query), fold datapoint scores with the
     entity's probmethod (reference Searchdomain.cs:256-257)."""
-    w = dwa_weight(F.col("entity_probmethod"), F.col("datapoint"))
     return (
-        dp_scores.withColumn("w2", w)
+        dp_scores.withColumn("w2", _cascade_column("w2"))
         .groupBy("searchdomain", "entity", "query", "entity_probmethod")
-        .agg(
-            probmethod_dispatch_agg(
-                F.col("dp_score"), F.col("entity_probmethod"), F.col("w2")
-            ).alias("score")
-        )
+        .agg(_cascade_column("score").alias("score"))
     )
 
 

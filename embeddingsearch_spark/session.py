@@ -65,6 +65,13 @@ def get_spark(
         # Keeping the conf out makes local runs replicate foreign sessions.
         # Quieter local runs; no effect on semantics.
         .config("spark.ui.enabled", "false")
+        # PySpark records the Python call site of every DataFrame and F.*
+        # call for error messages, at about 4 extra py4j round trips per
+        # call (getActiveSession, conf.get, a stack walk, origin set).
+        # Off, an analysis error names the failing expression but not the
+        # Python line that built it; pass extra_conf={"spark.python.sql.
+        # dataFrameDebugging.enabled": "true"} to get the line back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -31,13 +31,15 @@ SEED = 42
 _TWO_PI = 2.0 * math.pi
 
 
-def _component(text: Column, model: Column, k: int) -> Column:
+def _component(text: Column, model: Column, k: int | Column) -> Column:
     """Raw component k: sin(h mod 10000 / 10000 * 2π) where h is the first
-    60 bits of sha256(text|model|seed|k)."""
+    60 bits of sha256(text|model|seed|k). ``k`` is an int or an integer
+    Column (a lambda variable of the embedder's transform)."""
+    k = F.lit(str(k)) if isinstance(k, int) else k.cast("string")
     h = F.conv(
         F.substring(
             F.sha2(
-                F.concat_ws("|", text, model, F.lit(str(SEED)), F.lit(str(k))),
+                F.concat_ws("|", text, model, F.lit(str(SEED)), k),
                 256,
             ),
             1,
@@ -52,8 +54,16 @@ def _component(text: Column, model: Column, k: int) -> Column:
 def deterministic_embedding(
     text: Column, model: Column, dim: int = DEFAULT_DIM
 ) -> Column:
-    """L2-normalized deterministic embedding as array<double>."""
-    arr = F.array(*[_component(text, model, k) for k in range(dim)])
+    """L2-normalized deterministic embedding as array<double>. The
+    components are one transform over 0..dim-1, not ``dim`` unrolled
+    sha256 trees: building an expression node is a py4j round trip."""
+    if dim < 1:
+        # sequence(0, dim - 1) would count down, not come back empty
+        raise ValueError(f"dim must be positive, got {dim}")
+    arr = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda k: _component(text, model, k),
+    )
     norm = F.sqrt(
         F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x * x)
     )

@@ -249,7 +249,10 @@ def literal_frame(spark, rows, schema):
     count. Supports the bounded-collect row shapes the serve paths
     re-create (ints, floats incl. ±inf/NaN, strings, bools, None);
     ``schema`` is a DDL string or StructType whose declared types the
-    literals are CAST to, so the frame's schema matches createDataFrame's.
+    literals are CAST to, so the frame's column types match
+    createDataFrame's. Nullability does not: a column with no NULL
+    literal comes back non-nullable, where createDataFrame's fields are
+    all nullable.
 
     Falls back to createDataFrame for empty row sets (VALUES needs at
     least one tuple) — an empty frame is referenced, never scanned."""

@@ -93,6 +93,11 @@ def test_embedding_norm_matches_per_element_formula(spark):
     assert all(r["old"] == r["new"] for r in out)
 
 
+def test_embedding_rejects_non_positive_dim(spark):
+    with pytest.raises(ValueError, match="dim must be positive"):
+        deterministic_embedding(F.col("text"), F.col("model"), 0)
+
+
 def test_write_path_reads_caller_batch_once(spark, tmp_path):
     """`index_entities` and `delete_entities` read the caller's frame
     once (its Python-RDD scan bumps an accumulator per row), with the

@@ -31,11 +31,16 @@ CORPUS = [
     for dp, (sim, dpm) in dps.items()
     for model in MODELS
 ]
+CORPUS_SCHEMA = (
+    "searchdomain string, entity string, entity_probmethod string, "
+    "datapoint string, dp_probmethod string, simmethod string, "
+    "text_hash string, model string, vector array<double>"
+)
 QUERY = [("q1", m, _vec()) for m in MODELS]
 
 
-def _numpy_expected():
-    qv = {m: v for _, m, v in QUERY}
+def _numpy_expected(qv=None):
+    qv = qv or {m: v for _, m, v in QUERY}
     scores = {}
     for ent, (epm, dps) in ENTITIES.items():
         dp_scores, dp_keys = [], []
@@ -53,12 +58,7 @@ def _numpy_expected():
 
 
 def test_cascade_matches_numpy(spark):
-    corpus = spark.createDataFrame(
-        CORPUS,
-        "searchdomain string, entity string, entity_probmethod string, "
-        "datapoint string, dp_probmethod string, simmethod string, "
-        "text_hash string, model string, vector array<double>",
-    )
+    corpus = spark.createDataFrame(CORPUS, CORPUS_SCHEMA)
     queries = spark.createDataFrame(QUERY, "query string, model string, vector array<double>")
     got = {
         r["entity"]: (r["score"], r["rank"])
@@ -75,12 +75,55 @@ def test_cascade_matches_numpy(spark):
 
 
 def test_topn_applied_at_read_time(spark):
-    corpus = spark.createDataFrame(
-        CORPUS,
-        "searchdomain string, entity string, entity_probmethod string, "
-        "datapoint string, dp_probmethod string, simmethod string, "
-        "text_hash string, model string, vector array<double>",
-    )
+    corpus = spark.createDataFrame(CORPUS, CORPUS_SCHEMA)
     queries = spark.createDataFrame(QUERY, "query string, model string, vector array<double>")
     assert S.search(corpus, queries, topn=2).count() == 2
     assert S.search(corpus, queries, topn=None).count() == 3
+
+
+def test_engine_search_builds_only_query_dependent_nodes(spark, monkeypatch):
+    """A warm `Engine.search` build adds only the query-dependent nodes:
+    the cascade's fixed Column trees are built once and the embedder is
+    one transform, so the build issues a few hundred py4j commands (the
+    unrolled trees took about 8,000). Its ranking matches NumPy over the
+    same vectors."""
+    import gc
+
+    from pyspark import SparkContext
+
+    from embeddingsearch_spark.api import Engine
+    from embeddingsearch_spark.sources.embedder import _embed_one
+
+    eng = Engine(spark, dim=DIM)
+    eng.index_flat = spark.createDataFrame(CORPUS, CORPUS_SCHEMA)
+    eng.search("warm up", "sd", 3)
+
+    client = SparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    # py4j releases the JVM side of collected objects with commands of its
+    # own; collect earlier garbage first so only this build is counted
+    gc.collect()
+    gc.disable()
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            df = eng.search("hello world", "sd", 3)
+    finally:
+        gc.enable()
+    assert len(sent) <= 600, len(sent)
+
+    want = _numpy_expected(
+        {m: _embed_one("hello world", m, DIM) for m in MODELS}
+    )
+    got = sorted(df.collect(), key=lambda r: r["rank"])
+    assert [r["entity"] for r in got] == sorted(
+        want, key=lambda e: (-round(want[e], 6), e)
+    )
+    for r in got:
+        assert r["score"] == pytest.approx(round(want[r["entity"]], 6), abs=2e-6)
