@@ -33,6 +33,31 @@ def _cosine_from_parts(dot_ab: Column, na: Column, nb: Column) -> Column:
     return (raw + 1.0) / 2.0
 
 
+def _rank_by_cosine(
+    cand: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """Top ``k`` per query over (query, candidate) rows that carry the
+    candidate vector and norm (``vec_col``, ``_vn``) beside the query's
+    (``_qvec``, ``_qn``): rounded remapped cosine, ties broken by id
+    ascending. Columns (query_id, id, cosine, rank)."""
+    sim = _cosine_from_parts(
+        dot(F.col(vec_col), F.col("_qvec")),
+        F.col("_vn"),
+        F.col("_qn"),
+    )
+    scored = cand.select(
+        F.col(query_id_col),
+        F.col(id_col),
+        F.round(sim, ROUND_DIGITS).alias("cosine"),
+    )
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.col("cosine").desc(), F.col(id_col).asc()
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= int(k)
+    )
+
+
 def hard_negative_mine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -180,32 +205,12 @@ def brute_force_topk(
             norm2(F.col(vec_col)).alias("_qn"),
         )
     )
-    scored = (
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            norm2(F.col(vec_col)).alias("_cn"),
-        )
-        .crossJoin(q)
-        .select(
-            F.col(query_id_col),
-            F.col(id_col),
-            F.round(
-                _cosine_from_parts(
-                    dot(F.col(vec_col), F.col("_qvec")),
-                    F.col("_cn"),
-                    F.col("_qn"),
-                ),
-                ROUND_DIGITS,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    cand = corpus.select(
+        F.col(id_col),
+        F.col(vec_col),
+        norm2(F.col(vec_col)).alias("_vn"),
+    ).crossJoin(q)
+    return _rank_by_cosine(cand, k, id_col, vec_col, query_id_col)
 
 
 def brute_force_topk_numpy(
@@ -1028,20 +1033,7 @@ def ivf_topk(
         .join(F.broadcast(probe), centroid_id_col)
         .join(F.broadcast(q), query_id_col)
     )
-    sim = _cosine_from_parts(
-        dot(F.col(vec_col), F.col("_qvec")), F.col("_vn"), F.col("_qn")
-    )
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(sim, ROUND_DIGITS).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank_by_cosine(cand, k, id_col, vec_col, query_id_col)
 
 
 def save_ivf_index(
@@ -1332,6 +1324,164 @@ def _corpus_sample_pred(id_col: str, fraction: float):
     )
 
 
+def _resolve_nprobe(spark, prefix, nprobe, route, partition_col, calibrate):
+    """The one place a federated IVF probe width is picked, for every
+    serve layout (raw, SQ8, SQ4; direct, cached, aliased) and for
+    `ivf_scan_cost`. An int passes through. A ``{tenant: width}`` map
+    must cover every routed tenant: the width join is inner, so a gap
+    would silently serve that tenant ZERO candidates (the collect is
+    validation-only, so only user maps pay it). ``"auto"`` is the rule
+    over the live quantizer sizes (`ivf_auto_nprobe`), ``"calibrated"``
+    is ``calibrate()`` (the caller's measurement on its own query
+    batch), and ``"stored"`` reads the persisted per-generation
+    calibration back (`ivf_stored_nprobe`, rule floor for tenants
+    onboarded since). Anything else raises."""
+    if isinstance(nprobe, dict):
+        routed = route.select(partition_col).distinct().collect()
+        gap = sorted(
+            {str(r[0]) for r in routed} - {str(t) for t in nprobe}
+        )
+        if gap:
+            raise ValueError(
+                f"nprobe map missing routed collections: {gap}"
+            )
+        return nprobe
+    if not isinstance(nprobe, str):
+        return nprobe
+    if nprobe == "auto":
+        return ivf_auto_nprobe(spark, prefix, partition_col)
+    if nprobe == "calibrated":
+        return calibrate()
+    if nprobe == "stored":
+        from embeddingsearch_spark.operators.calibration import (
+            ivf_stored_nprobe,
+        )
+
+        return ivf_stored_nprobe(spark, prefix, partition_col)
+    raise ValueError(
+        f"unknown nprobe {nprobe!r} (use 'auto', 'calibrated', or 'stored')"
+    )
+
+
+def _query_vectors(queries, route, partition_col, vec_col, query_id_col):
+    """Each routed query's vector and norm: (query_id, tenant, _qvec,
+    _qn)."""
+    return queries.join(
+        F.broadcast(route.select(query_id_col, partition_col)),
+        query_id_col,
+    ).select(
+        query_id_col,
+        partition_col,
+        F.col(vec_col).alias("_qvec"),
+        norm2(F.col(vec_col)).alias("_qn"),
+    )
+
+
+def _probe_cells(
+    spark, prefix, qv, route, nprobe,
+    partition_col, vec_col, query_id_col, centroid_id_col,
+):
+    """The cell probe of a federated IVF index: each query's OWN
+    tenant's cells ranked by rounded centroid cosine (desc, cell id
+    asc) as ``_r``. With a resolved ``nprobe`` (int or map) only the
+    first ``_np`` cells per query are kept; ``None`` keeps them all.
+    The quantizer is trimmed to the routed tenants by a semi-join
+    inside the broadcast build, with no driver collect; the inner probe
+    join enforces routing regardless, so the trim only saves size."""
+    cents = spark.table(f"{prefix}_centroids").join(
+        F.broadcast(route.select(partition_col).distinct()),
+        partition_col,
+        "left_semi",
+    )
+    pc = cents.select(
+        partition_col,
+        centroid_id_col,
+        F.col(vec_col).alias("_cvec"),
+        norm2(F.col(vec_col)).alias("_cn"),
+    )
+    psim = _cosine_from_parts(
+        dot(F.col("_cvec"), F.col("_qvec")),
+        F.col("_cn"),
+        F.col("_qn"),
+    )
+    pw = Window.partitionBy(query_id_col).orderBy(
+        F.col("_psim").desc(), F.col(centroid_id_col).asc()
+    )
+    ranked = (
+        qv.join(F.broadcast(pc), partition_col)
+        .select(
+            query_id_col,
+            partition_col,
+            centroid_id_col,
+            F.round(psim, ROUND_DIGITS).alias("_psim"),
+        )
+        .withColumn("_r", F.row_number().over(pw))
+    )
+    if nprobe is None:
+        return ranked
+    if isinstance(nprobe, dict):
+        np_map = tables.literal_frame(
+            spark,
+            [(str(t), int(v)) for t, v in sorted(nprobe.items())],
+            f"{partition_col} string, _np int",
+        )
+        ranked = ranked.join(F.broadcast(np_map), partition_col)
+    else:
+        ranked = ranked.withColumn("_np", F.lit(int(nprobe)))
+    return ranked.filter(F.col("_r") <= F.col("_np"))
+
+
+def _ivf_serve(
+    spark, prefix, queries, route, k, nprobe, scan,
+    partition_col, id_col, vec_col, query_id_col, centroid_id_col,
+):
+    """The federated IVF serve shared by every storage layout: resolve
+    the probe width, probe each query's own tenant's cells, cut the
+    index to the probed (tenant, cell) partitions with a literal
+    two-level predicate (static pruning, so no other tenant's files are
+    read), then score exact cosine and keep the top ``k`` per query.
+
+    ``scan(pred)`` is the layout: it returns the rows of the partitions
+    matching ``pred`` as (id, tenant, cell, vector) columns — the raw
+    table as stored, or compressed codes decoded. Calibration measures
+    against ``scan`` over every cell, the fidelity this serve scores
+    at. The probe collect is bounded by |queries| x nprobe."""
+    from embeddingsearch_spark.operators.retrieval import (
+        _partition_filter,
+    )
+
+    nprobe = _resolve_nprobe(
+        spark, prefix, nprobe, route, partition_col,
+        lambda: ivf_calibrated_nprobe(
+            spark, prefix, queries, route, k=k,
+            partition_col=partition_col, id_col=id_col,
+            vec_col=vec_col, query_id_col=query_id_col,
+            centroid_id_col=centroid_id_col,
+            assigned_df=scan(F.lit(True)),
+        ),
+    )
+    qv = _query_vectors(
+        queries, route, partition_col, vec_col, query_id_col
+    )
+    probe = _probe_cells(
+        spark, prefix, qv, route, nprobe,
+        partition_col, vec_col, query_id_col, centroid_id_col,
+    ).select(
+        query_id_col, partition_col, centroid_id_col
+    ).localCheckpoint(eager=False)
+    pairs = probe.select(partition_col, centroid_id_col).distinct().collect()
+    cand = (
+        scan(_partition_filter([partition_col, centroid_id_col], pairs))
+        .withColumn("_vn", norm2(F.col(vec_col)))
+        .join(F.broadcast(probe), [partition_col, centroid_id_col])
+        .join(
+            F.broadcast(qv.select(query_id_col, "_qvec", "_qn")),
+            query_id_col,
+        )
+    )
+    return _rank_by_cosine(cand, k, id_col, vec_col, query_id_col)
+
+
 def ivf_calibrated_nprobe(
     spark,
     prefix: str,
@@ -1393,27 +1543,17 @@ def ivf_calibrated_nprobe(
     the sample."""
     import math
 
-    from embeddingsearch_spark.operators.retrieval import (
-        _partition_filter,
-    )
-
     out = ivf_auto_nprobe(spark, prefix, partition_col, recall_target)
     ws = Window.partitionBy(partition_col).orderBy(
         F.col(query_id_col).asc()
     )
     qs = (
-        sample_queries.join(
-            F.broadcast(route.select(query_id_col, partition_col)),
-            query_id_col,
+        _query_vectors(
+            sample_queries, route, partition_col, vec_col, query_id_col
         )
         .withColumn("_sr", F.row_number().over(ws))
         .filter(F.col("_sr") <= int(sample_per_tenant))
-        .select(
-            query_id_col,
-            partition_col,
-            F.col(vec_col).alias("_qvec"),
-            norm2(F.col(vec_col)).alias("_qn"),
-        )
+        .drop("_sr")
         .localCheckpoint(eager=False)
     )
     routed = [
@@ -1421,41 +1561,16 @@ def ivf_calibrated_nprobe(
     ]
     if not routed:
         return out
-    cents = spark.table(f"{prefix}_centroids").filter(
-        F.col(partition_col).isin(routed)
+    ranks = _probe_cells(
+        spark, prefix, qs, route, None,
+        partition_col, vec_col, query_id_col, centroid_id_col,
+    ).select(query_id_col, centroid_id_col, F.col("_r").alias("_need"))
+    corpus = (
+        assigned_df
+        if assigned_df is not None
+        else spark.table(f"{prefix}_assigned")
     )
-    pc = cents.select(
-        partition_col,
-        centroid_id_col,
-        F.col(vec_col).alias("_cvec"),
-        norm2(F.col(vec_col)).alias("_cn"),
-    )
-    psim = _cosine_from_parts(
-        dot(F.col("_cvec"), F.col("_qvec")),
-        F.col("_cn"),
-        F.col("_qn"),
-    )
-    pw = Window.partitionBy(query_id_col).orderBy(
-        F.col("_psim").desc(), F.col(centroid_id_col).asc()
-    )
-    ranks = (
-        qs.join(F.broadcast(pc), partition_col)
-        .select(
-            query_id_col,
-            centroid_id_col,
-            F.round(psim, ROUND_DIGITS).alias("_psim"),
-        )
-        .withColumn("_need", F.row_number().over(pw))
-        .select(query_id_col, centroid_id_col, "_need")
-    )
-    if assigned_df is not None:
-        pruned = assigned_df.filter(
-            F.col(partition_col).isin(routed)
-        )
-    else:
-        pruned = spark.table(f"{prefix}_assigned").filter(
-            _partition_filter([partition_col], [(t,) for t in routed])
-        )
+    pruned = corpus.filter(F.col(partition_col).isin(routed))
     if corpus_sample is not None and corpus_sample < 1.0:
         pruned = pruned.filter(
             _corpus_sample_pred(id_col, corpus_sample)
@@ -1548,140 +1663,10 @@ def ivf_federated_from_index(
     Result = per-tenant
     `ivf_topk` run inside each collection (tested), columns
     (query_id, id, cosine, rank)."""
-    from embeddingsearch_spark.operators.retrieval import (
-        _partition_filter,
-    )
-
-    user_map = isinstance(nprobe, dict)
-    if isinstance(nprobe, str):
-        if nprobe == "auto":
-            nprobe = ivf_auto_nprobe(spark, prefix, partition_col)
-        elif nprobe == "calibrated":
-            nprobe = ivf_calibrated_nprobe(
-                spark,
-                prefix,
-                queries,
-                route,
-                k=k,
-                partition_col=partition_col,
-                id_col=id_col,
-                vec_col=vec_col,
-                query_id_col=query_id_col,
-                centroid_id_col=centroid_id_col,
-            )
-        elif nprobe == "stored":
-            # persisted calibration (calibrate_and_store_ivf) — the
-            # per-generation offline measurement read back in one
-            # bounded collect, rule floor for uncalibrated tenants
-            from embeddingsearch_spark.operators.calibration import (
-                ivf_stored_nprobe,
-            )
-
-            nprobe = ivf_stored_nprobe(spark, prefix, partition_col)
-        else:
-            raise ValueError(
-                f"unknown nprobe {nprobe!r} "
-                "(use 'auto', 'calibrated', or 'stored')"
-            )
-    cents = spark.table(f"{prefix}_centroids")
-    if user_map:
-        # A hand-built width map with a routed tenant missing would
-        # silently serve that tenant ZERO candidates (the width join
-        # is inner) — raise instead; the derived maps ('auto'/
-        # 'calibrated') cover every tenant with centroids, so only
-        # user maps are exposed to the gap. The collect is validation-
-        # only, so only the user-map path pays it.
-        routed = route.select(partition_col).distinct().collect()
-        gap = sorted(
-            {str(r[0]) for r in routed} - {str(t) for t in nprobe}
-        )
-        if gap:
-            raise ValueError(
-                f"nprobe map missing routed collections: {gap}"
-            )
-    # trim the broadcast quantizer to the routed tenants WITHOUT a
-    # driver collect (one action per serve saved): the semi-join runs
-    # inside the broadcast build; the inner probe join below enforces
-    # routing regardless, so this is a size trim, not a correctness cut
-    tcents = cents.join(
-        F.broadcast(route.select(partition_col).distinct()),
-        partition_col,
-        "left_semi",
-    )
-    qv = queries.join(
-        F.broadcast(route.select(query_id_col, partition_col)),
-        query_id_col,
-    ).select(
-        query_id_col,
-        partition_col,
-        F.col(vec_col).alias("_qvec"),
-        norm2(F.col(vec_col)).alias("_qn"),
-    )
-    pc = tcents.select(
-        partition_col,
-        centroid_id_col,
-        F.col(vec_col).alias("_cvec"),
-        norm2(F.col(vec_col)).alias("_cn"),
-    )
-    psim = _cosine_from_parts(
-        dot(F.col("_cvec"), F.col("_qvec")),
-        F.col("_cn"),
-        F.col("_qn"),
-    )
-    pw = Window.partitionBy(query_id_col).orderBy(
-        F.col("_psim").desc(), F.col(centroid_id_col).asc()
-    )
-    ranked = (
-        qv.join(F.broadcast(pc), partition_col)
-        .select(
-            query_id_col,
-            partition_col,
-            centroid_id_col,
-            F.round(psim, ROUND_DIGITS).alias("_psim"),
-        )
-        .withColumn("_r", F.row_number().over(pw))
-    )
-    if isinstance(nprobe, dict):
-        np_map = tables.literal_frame(
-            spark,
-            [(str(t), int(v)) for t, v in sorted(nprobe.items())],
-            f"{partition_col} string, _np int",
-        )
-        ranked = ranked.join(F.broadcast(np_map), partition_col).filter(
-            F.col("_r") <= F.col("_np")
-        )
-    else:
-        ranked = ranked.filter(F.col("_r") <= nprobe)
-    probe = ranked.select(
-        query_id_col, partition_col, centroid_id_col
-    ).localCheckpoint(eager=False)
-    pairs = probe.select(partition_col, centroid_id_col).distinct().collect()
-    pruned = spark.table(f"{prefix}_assigned").filter(
-        _partition_filter([partition_col, centroid_id_col], pairs)
-    )
-    cand = (
-        pruned.withColumn("_vn", norm2(F.col(vec_col)))
-        .join(F.broadcast(probe), [partition_col, centroid_id_col])
-        .join(
-            F.broadcast(qv.select(query_id_col, "_qvec", "_qn")),
-            query_id_col,
-        )
-    )
-    sim = _cosine_from_parts(
-        dot(F.col(vec_col), F.col("_qvec")),
-        F.col("_vn"),
-        F.col("_qn"),
-    )
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(sim, ROUND_DIGITS).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _ivf_serve(
+        spark, prefix, queries, route, k, nprobe,
+        spark.table(f"{prefix}_assigned").filter,
+        partition_col, id_col, vec_col, query_id_col, centroid_id_col,
     )
 
 

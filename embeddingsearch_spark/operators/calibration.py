@@ -41,7 +41,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from embeddingsearch_spark import tables
 
 CALIB_SUFFIX = "_calib"
 
@@ -686,9 +685,7 @@ def retrain_and_recalibrate_ivf_sq8_tenants(
     picks up the refresh with no other change. Returns the stored
     {tenant: nprobe} map for the retrained tenants."""
     from embeddingsearch_spark.operators.sq import (
-        _codes_shifted,
-        _dequant_expr,
-        _join_stats,
+        _index_rows,
         retrain_federated_ivf_sq8_tenants,
     )
 
@@ -704,16 +701,9 @@ def retrain_and_recalibrate_ivf_sq8_tenants(
         .distinct()
         .collect()
     ]  # bounded: one row per retrained collection
-    codes_tbl = spark.table(f"{prefix}_codes")
-    deq_all = _join_stats(
-        codes_tbl, spark.table(f"{prefix}_sqstats"), partition_col
-    ).select(
-        id_col,
-        partition_col,
-        centroid_id_col,
-        _dequant_expr(
-            codes_col, shifted=_codes_shifted(codes_tbl, codes_col)
-        ).alias(vec_col),
+    deq_all = _index_rows(
+        spark, prefix, None, partition_col, id_col, centroid_id_col,
+        codes_col, vec_col,
     )
     return calibrate_and_store_ivf(
         spark, prefix, sample_queries, route, tenants=tenants,
@@ -786,7 +776,9 @@ def ivf_scan_cost(
     the serve's scan. ``assigned_table`` overrides the
     ``{prefix}_assigned`` default — pass ``{prefix}_codes`` to price
     the COMPRESSED layout (row counts are identical; the bytes
-    differ). ``bytes_per_row`` prices the report in BYTES — pass the
+    differ; a ``"calibrated"`` width is then measured on the decoded
+    codes, as the compressed serve measures it). ``bytes_per_row``
+    prices the report in BYTES — pass the
     layout's `table_bytes_per_row` measurement and two extra columns
     appear: ``bytes_per_row`` (the pricing input, echoed) and
     ``bytes_scanned`` (floor(rows_scanned × bytes_per_row)) — so the
@@ -795,101 +787,52 @@ def ivf_scan_cost(
     round-10 table). Columns: (tenant, nprobe, n_queries,
     cells_probed, rows_scanned, corpus_rows, scan_frac
     [, bytes_per_row, bytes_scanned])."""
-    from embeddingsearch_spark.functions.vectors import dot, norm2
     from embeddingsearch_spark.operators.ann import (
-        ROUND_DIGITS,
-        Window,
-        _cosine_from_parts,
-        ivf_auto_nprobe,
+        _probe_cells,
+        _query_vectors,
+        _resolve_nprobe,
         ivf_calibrated_nprobe,
     )
+    from embeddingsearch_spark.operators.sq import _index_rows
 
-    user_map = isinstance(nprobe, dict)
-    if isinstance(nprobe, str):
-        if nprobe == "auto":
-            nprobe = ivf_auto_nprobe(spark, prefix, partition_col)
-        elif nprobe == "calibrated":
-            nprobe = ivf_calibrated_nprobe(
-                spark, prefix, queries, route, k=k,
-                partition_col=partition_col, id_col=id_col,
-                vec_col=vec_col, query_id_col=query_id_col,
-                centroid_id_col=centroid_id_col,
+    table = spark.table(assigned_table or f"{prefix}_assigned")
+
+    def calibrate():
+        # measure against what the priced layout's serve scores: raw
+        # vectors, or a compressed generation's codes decoded
+        corpus = (
+            table
+            if vec_col in table.columns
+            else _index_rows(
+                spark, prefix, None, partition_col, id_col,
+                centroid_id_col, vec_col=vec_col,
             )
-        elif nprobe == "stored":
-            nprobe = ivf_stored_nprobe(spark, prefix, partition_col)
-        else:
-            raise ValueError(
-                f"unknown nprobe {nprobe!r} "
-                "(use 'auto', 'calibrated', or 'stored')"
-            )
-    if user_map:
-        # same gap contract as the serve: a hand-built map missing a
-        # routed tenant would silently price that tenant at ZERO scan
-        gap = sorted(
-            {
-                str(r[0])
-                for r in route.select(partition_col)
-                .distinct()
-                .collect()
-            }
-            - {str(t) for t in nprobe}
         )
-        if gap:
-            raise ValueError(
-                f"nprobe map missing routed collections: {gap}"
-            )
-    cents = spark.table(f"{prefix}_centroids")
-    qv = queries.join(
-        F.broadcast(route.select(query_id_col, partition_col)),
-        query_id_col,
-    ).select(
-        query_id_col,
-        partition_col,
-        F.col(vec_col).alias("_qvec"),
-        norm2(F.col(vec_col)).alias("_qn"),
+        return ivf_calibrated_nprobe(
+            spark, prefix, queries, route, k=k,
+            partition_col=partition_col, id_col=id_col,
+            vec_col=vec_col, query_id_col=query_id_col,
+            centroid_id_col=centroid_id_col, assigned_df=corpus,
+        )
+
+    nprobe = _resolve_nprobe(
+        spark, prefix, nprobe, route, partition_col, calibrate
     )
-    pc = cents.select(
+    probe = _probe_cells(
+        spark,
+        prefix,
+        _query_vectors(queries, route, partition_col, vec_col, query_id_col),
+        route,
+        nprobe,
         partition_col,
+        vec_col,
+        query_id_col,
         centroid_id_col,
-        F.col(vec_col).alias("_cvec"),
-        norm2(F.col(vec_col)).alias("_cn"),
     )
-    psim = _cosine_from_parts(
-        dot(F.col("_cvec"), F.col("_qvec")),
-        F.col("_cn"),
-        F.col("_qn"),
-    )
-    pw = Window.partitionBy(query_id_col).orderBy(
-        F.col("_psim").desc(), F.col(centroid_id_col).asc()
-    )
-    ranked = (
-        qv.join(F.broadcast(pc), partition_col)
-        .select(
-            query_id_col,
-            partition_col,
-            centroid_id_col,
-            F.round(psim, ROUND_DIGITS).alias("_psim"),
-        )
-        .withColumn("_r", F.row_number().over(pw))
-    )
-    if isinstance(nprobe, dict):
-        np_df = tables.literal_frame(
-            spark,
-            [(str(t), int(v)) for t, v in sorted(nprobe.items())],
-            f"{partition_col} string, _np int",
-        )
-        probe = ranked.join(F.broadcast(np_df), partition_col).filter(
-            F.col("_r") <= F.col("_np")
-        )
-    else:
-        probe = ranked.withColumn("_np", F.lit(int(nprobe))).filter(
-            F.col("_r") <= int(nprobe)
-        )
     # one offline aggregate of the assignment table: per-cell sizes
     # (the audit's cost — the serve never scans unprobed cells)
     sizes = (
-        spark.table(assigned_table or f"{prefix}_assigned")
-        .groupBy(partition_col, centroid_id_col)
+        table.groupBy(partition_col, centroid_id_col)
         .agg(F.count(F.lit(1)).alias("_sz"))
     )
     corpus = sizes.groupBy(partition_col).agg(

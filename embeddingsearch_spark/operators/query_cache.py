@@ -692,63 +692,59 @@ def serve_ivf_federated_cached(
     `calibrate_and_store_ivf`, and a recalibration bumps the folded
     widths, invalidating naturally."""
     from embeddingsearch_spark.operators.ann import (
-        ivf_auto_nprobe,
-        ivf_calibrated_nprobe,
         ivf_federated_from_index,
     )
 
-    lazy_calibrated = False
-    if isinstance(nprobe, str):
-        if nprobe == "auto":
-            nprobe = ivf_auto_nprobe(spark, index_prefix, partition_col)
-        elif nprobe == "calibrated":
-            lazy_calibrated = True
-            nprobe = {t: "calibrated" for t in index_versions}
-        elif nprobe == "stored":
-            from embeddingsearch_spark.operators.calibration import (
-                ivf_stored_nprobe,
-            )
+    def serve(q, r, np_miss):
+        return ivf_federated_from_index(
+            spark, index_prefix, q, r, k=k, nprobe=np_miss,
+            partition_col=partition_col, id_col=id_col,
+            vec_col=vec_col, query_id_col=query_id_col,
+        )
 
-            nprobe = ivf_stored_nprobe(
-                spark, index_prefix, partition_col
-            )
-        else:
-            raise ValueError(
-                f"unknown nprobe {nprobe!r} "
-                "(use 'auto', 'calibrated', or 'stored')"
-            )
-        index_versions = _fold_config_versions(index_versions, nprobe)
+    return _serve_ivf_layout_cached(
+        spark, cache_table, index_prefix, queries, route,
+        index_versions, k, nprobe, partition_col, id_col, vec_col,
+        query_id_col, now, f"{index_prefix}_assigned", serve,
+    )
+
+
+def _serve_ivf_layout_cached(
+    spark, cache_table, index_prefix, queries, route, index_versions,
+    k, nprobe, partition_col, id_col, vec_col, query_id_col, now,
+    id_table, serve,
+):
+    """The tenant-keyed cached serve shared by the federated IVF
+    layouts (raw and compressed): ``serve(queries, route, nprobe)``
+    runs the layout's serve on the missed queries, and ``id_table``
+    holds the id column's type. "auto"/"stored" resolve ONCE here and
+    fold into the cache keys; "calibrated" folds a mode marker and
+    stays lazy: the miss-path serve measures on the missed queries
+    only."""
+    from embeddingsearch_spark.operators.ann import _resolve_nprobe
+
+    np_miss = nprobe
+    if isinstance(nprobe, str):
+        widths = _resolve_nprobe(
+            spark, index_prefix, nprobe, route, partition_col,
+            lambda: {t: "calibrated" for t in index_versions},
+        )
+        index_versions = _fold_config_versions(index_versions, widths)
+        if nprobe != "calibrated":
+            np_miss = widths
     qkeyed = _vector_tenant_qkeyed(
         spark, queries, route, index_versions, partition_col,
         vec_col, query_id_col,
     )
     id_type = (
-        spark.table(f"{index_prefix}_assigned").schema[id_col]
-        .dataType.simpleString()
+        spark.table(id_table).schema[id_col].dataType.simpleString()
     )
 
     def compute(misses_q):
-        np_local = nprobe
-        if lazy_calibrated:
-            # measure on the MISSED queries only — hits never pay this
-            np_local = ivf_calibrated_nprobe(
-                spark, index_prefix,
-                misses_q.select(query_id_col, vec_col),
-                misses_q.select(query_id_col, partition_col),
-                k=k, partition_col=partition_col, id_col=id_col,
-                vec_col=vec_col, query_id_col=query_id_col,
-            )
-        return ivf_federated_from_index(
-            spark,
-            index_prefix,
+        return serve(
             misses_q.select(query_id_col, vec_col),
             misses_q.select(query_id_col, partition_col),
-            k=k,
-            nprobe=np_local,
-            partition_col=partition_col,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
+            np_miss,
         )
 
     return _serve_cached(
@@ -793,100 +789,22 @@ def serve_ivf_sq8_federated_cached(
     path only, against the DEQUANTIZED codes (the fidelity the miss
     path scores at), so a fully-warm serve never scans the codes
     table. Prefer ``"stored"`` in production."""
-    from embeddingsearch_spark.operators.ann import (
-        ivf_auto_nprobe,
-        ivf_calibrated_nprobe,
-    )
     from embeddingsearch_spark.operators.sq import (
-        _index_dequant_expr,
-        _join_stats,
         ivf_sq8_federated_from_index,
     )
 
-    lazy_calibrated = False
-    if isinstance(nprobe, str):
-        if nprobe == "auto":
-            nprobe = ivf_auto_nprobe(spark, index_prefix, partition_col)
-        elif nprobe == "calibrated":
-            lazy_calibrated = True
-            nprobe = {t: "calibrated" for t in index_versions}
-        elif nprobe == "stored":
-            from embeddingsearch_spark.operators.calibration import (
-                ivf_stored_nprobe,
-            )
-
-            nprobe = ivf_stored_nprobe(
-                spark, index_prefix, partition_col
-            )
-        else:
-            raise ValueError(
-                f"unknown nprobe {nprobe!r} "
-                "(use 'auto', 'calibrated', or 'stored')"
-            )
-        index_versions = _fold_config_versions(index_versions, nprobe)
-    qkeyed = _vector_tenant_qkeyed(
-        spark, queries, route, index_versions, partition_col,
-        vec_col, query_id_col,
-    )
-    id_type = (
-        spark.table(f"{index_prefix}_codes").schema[id_col]
-        .dataType.simpleString()
-    )
-
-    def compute(misses_q):
-        np_local = nprobe
-        if lazy_calibrated:
-            deq_all = _join_stats(
-                spark.table(f"{index_prefix}_codes"),
-                spark.table(f"{index_prefix}_sqstats"),
-                partition_col,
-            ).select(
-                id_col,
-                partition_col,
-                centroid_id_col,
-                # layout-detected (SQ8 int/tinyint OR packed SQ4) —
-                # the miss-path serve below detects the same way, so
-                # the cached wrapper serves any compressed generation
-                _index_dequant_expr(
-                    spark, index_prefix, codes_col
-                ).alias(vec_col),
-            )
-            np_local = ivf_calibrated_nprobe(
-                spark, index_prefix,
-                misses_q.select(query_id_col, vec_col),
-                misses_q.select(query_id_col, partition_col),
-                k=k, partition_col=partition_col, id_col=id_col,
-                vec_col=vec_col, query_id_col=query_id_col,
-                centroid_id_col=centroid_id_col,
-                assigned_df=deq_all,
-            )
+    def serve(q, r, np_miss):
         return ivf_sq8_federated_from_index(
-            spark,
-            index_prefix,
-            misses_q.select(query_id_col, vec_col),
-            misses_q.select(query_id_col, partition_col),
-            k=k,
-            nprobe=np_local,
-            partition_col=partition_col,
-            id_col=id_col,
-            vec_col=vec_col,
-            codes_col=codes_col,
-            query_id_col=query_id_col,
-            centroid_id_col=centroid_id_col,
+            spark, index_prefix, q, r, k=k, nprobe=np_miss,
+            partition_col=partition_col, id_col=id_col,
+            vec_col=vec_col, codes_col=codes_col,
+            query_id_col=query_id_col, centroid_id_col=centroid_id_col,
         )
 
-    return _serve_cached(
-        spark,
-        cache_table,
-        qkeyed,
-        compute,
-        k,
-        id_col,
-        id_type,
-        [("cosine", "double")],
-        query_id_col,
-        now,
-        scope_col=partition_col,
+    return _serve_ivf_layout_cached(
+        spark, cache_table, index_prefix, queries, route,
+        index_versions, k, nprobe, partition_col, id_col, vec_col,
+        query_id_col, now, f"{index_prefix}_codes", serve,
     )
 
 

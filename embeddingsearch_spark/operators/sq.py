@@ -34,7 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from embeddingsearch_spark import tables
 from embeddingsearch_spark.constants import ROUND_DIGITS
 from embeddingsearch_spark.functions.vectors import dot, norm2
 
@@ -201,14 +200,28 @@ def sq8_topk(
     bytes. With ``partition_col`` + ``route`` each query scans ONLY
     its own collection's codes (the federated contract). Columns
     (query_id, id, cosine, rank)."""
-    from embeddingsearch_spark.operators.ann import _cosine_from_parts
+    return _dequantized_topk(
+        sq8_dequantize(
+            codes, stats, partition_col, id_col, codes_col, vec_col
+        ),
+        queries, route, k, partition_col, id_col, vec_col, query_id_col,
+    )
 
-    # hoist the candidate norm BELOW the query join: computed once per
-    # candidate row instead of once per (query, candidate) pair — the
-    # join between the projections blocks CollapseProject re-inlining
-    deq = sq8_dequantize(
-        codes, stats, partition_col, id_col, codes_col, vec_col
-    ).withColumn("_vn", norm2(F.col(vec_col)))
+
+def _dequantized_topk(
+    deq, queries, route, k, partition_col, id_col, vec_col, query_id_col
+) -> DataFrame:
+    """The brute-force serve over decoded candidates ``deq`` (id,
+    tenant?, vector), shared by `sq8_topk` and `sq4_topk`: with
+    ``partition_col`` + ``route`` each query scans only its own
+    collection's rows, else every row."""
+    from embeddingsearch_spark.operators.ann import _rank_by_cosine
+
+    # hoist the candidate norm BELOW the query join: the decode chain
+    # and its norm run once per candidate row instead of once per
+    # (query, candidate) pair — the join between the projections
+    # blocks CollapseProject re-inlining
+    deq = deq.withColumn("_vn", norm2(F.col(vec_col)))
     qv = queries.select(
         query_id_col,
         F.col(vec_col).cast("array<double>").alias("_qvec"),
@@ -221,22 +234,7 @@ def sq8_topk(
         cand = deq.join(F.broadcast(qv), partition_col)
     else:
         cand = deq.crossJoin(F.broadcast(qv))  # documented brute path
-    sim = _cosine_from_parts(
-        dot(F.col(vec_col), F.col("_qvec")),
-        F.col("_vn"),
-        F.col("_qn"),
-    )
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(sim, ROUND_DIGITS).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= int(k)
-    )
+    return _rank_by_cosine(cand, k, id_col, vec_col, query_id_col)
 
 
 
@@ -388,6 +386,36 @@ def _codes_packed(codes_df: DataFrame, stats_df: DataFrame,
     return dim >= 2 and len(r[0][0]) == (dim + 1) // 2
 
 
+def _index_rows(
+    spark,
+    prefix: str,
+    pred=None,
+    partition_col: str = "source",
+    id_col: str = "vec_id",
+    centroid_id_col: str = "centroid_id",
+    codes_col: str = "codes",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """The DEQUANTIZED rows of a persisted compressed IVF generation —
+    (id, tenant, cell, ``vec_col``) with each code decoded by the
+    layout-detected `_index_dequant_expr` (SQ8 int, tinyint, or packed
+    SQ4). ``pred`` cuts the codes table before the decode (the serve's
+    probed-partition predicate). The one decode the serves, the cached
+    miss path, calibration and recalibration read, so a width is
+    always measured at the fidelity the serve scores at."""
+    codes = spark.table(f"{prefix}_codes")
+    if pred is not None:
+        codes = codes.filter(pred)
+    return _join_stats(
+        codes, spark.table(f"{prefix}_sqstats"), partition_col
+    ).select(
+        id_col,
+        partition_col,
+        centroid_id_col,
+        _index_dequant_expr(spark, prefix, codes_col).alias(vec_col),
+    )
+
+
 def sq4_topk(
     codes: DataFrame,
     stats: DataFrame,
@@ -405,41 +433,11 @@ def sq4_topk(
     deterministic tie-break; with ``partition_col`` + ``route`` each
     query scans only its collection's packed codes — the brute-force
     serve shape at ~1/8 the candidate bytes of raw."""
-    from embeddingsearch_spark.operators.ann import _cosine_from_parts
-
-    # hoist the candidate norm below the query join (same rationale as
-    # sq8_topk): the 4-bit unpack+dequantize chain AND its norm run
-    # once per candidate row, not once per (query, candidate) pair
-    deq = sq4_dequantize(
-        codes, stats, partition_col, id_col, codes_col, vec_col
-    ).withColumn("_vn", norm2(F.col(vec_col)))
-    qv = queries.select(
-        query_id_col,
-        F.col(vec_col).cast("array<double>").alias("_qvec"),
-    ).withColumn("_qn", norm2(F.col("_qvec")))
-    if partition_col and route is not None:
-        qv = qv.join(
-            F.broadcast(route.select(query_id_col, partition_col)),
-            query_id_col,
-        )
-        cand = deq.join(F.broadcast(qv), partition_col)
-    else:
-        cand = deq.crossJoin(F.broadcast(qv))  # documented brute path
-    sim = _cosine_from_parts(
-        dot(F.col(vec_col), F.col("_qvec")),
-        F.col("_vn"),
-        F.col("_qn"),
-    )
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(sim, ROUND_DIGITS).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= int(k)
+    return _dequantized_topk(
+        sq4_dequantize(
+            codes, stats, partition_col, id_col, codes_col, vec_col
+        ),
+        queries, route, k, partition_col, id_col, vec_col, query_id_col,
     )
 
 
@@ -601,160 +599,17 @@ def ivf_sq8_federated_from_index(
     full precision against the raw query (the asymmetric SQ trade).
     Net serve I/O = (nprobe/C_t of the tenant's rows) × (~1/8 of the
     bytes). Columns (query_id, id, cosine, rank)."""
-    from embeddingsearch_spark.operators.ann import (
-        _cosine_from_parts,
-        ivf_auto_nprobe,
-        ivf_calibrated_nprobe,
-    )
-    from embeddingsearch_spark.operators.retrieval import (
-        _partition_filter,
-    )
+    from embeddingsearch_spark.operators.ann import _ivf_serve
 
-    user_map = isinstance(nprobe, dict)
-    if isinstance(nprobe, str):
-        if nprobe == "auto":
-            nprobe = ivf_auto_nprobe(spark, prefix, partition_col)
-        elif nprobe == "calibrated":
-            # the ground-truth corpus for the measurement is the
-            # DEQUANTIZED codes — the fidelity this serve scores at
-            deq_all = _join_stats(
-                spark.table(f"{prefix}_codes"),
-                spark.table(f"{prefix}_sqstats"),
-                partition_col,
-            ).select(
-                id_col,
-                partition_col,
-                centroid_id_col,
-                _index_dequant_expr(spark, prefix, codes_col).alias(
-                    vec_col
-                ),
-            )
-            nprobe = ivf_calibrated_nprobe(
-                spark, prefix, queries, route, k=k,
-                partition_col=partition_col, id_col=id_col,
-                vec_col=vec_col, query_id_col=query_id_col,
-                centroid_id_col=centroid_id_col,
-                assigned_df=deq_all,
-            )
-        elif nprobe == "stored":
-            from embeddingsearch_spark.operators.calibration import (
-                ivf_stored_nprobe,
-            )
+    def scan(pred):
+        return _index_rows(
+            spark, prefix, pred, partition_col, id_col,
+            centroid_id_col, codes_col, vec_col,
+        )
 
-            nprobe = ivf_stored_nprobe(spark, prefix, partition_col)
-        else:
-            raise ValueError(
-                f"unknown nprobe {nprobe!r} "
-                "(use 'auto', 'calibrated', or 'stored')"
-            )
-    cents = spark.table(f"{prefix}_centroids")
-    if user_map:
-        # same inner-join gap contract as the raw federated serve;
-        # the collect is validation-only, so only user maps pay it
-        routed = route.select(partition_col).distinct().collect()
-        gap = sorted(
-            {str(r[0]) for r in routed} - {str(t) for t in nprobe}
-        )
-        if gap:
-            raise ValueError(
-                f"nprobe map missing routed collections: {gap}"
-            )
-    # broadcast-size trim without a driver collect (one action per
-    # serve saved) — the inner probe join enforces routing regardless
-    tcents = cents.join(
-        F.broadcast(route.select(partition_col).distinct()),
-        partition_col,
-        "left_semi",
-    )
-    qv = (
-        queries.join(
-            F.broadcast(route.select(query_id_col, partition_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            partition_col,
-            _dbl(vec_col).alias("_qvec"),
-        )
-        .withColumn("_qn", norm2(F.col("_qvec")))
-    )
-    pc = tcents.select(
-        partition_col,
-        centroid_id_col,
-        _dbl(vec_col).alias("_cvec"),
-    ).withColumn("_cn", norm2(F.col("_cvec")))
-    psim = _cosine_from_parts(
-        dot(F.col("_cvec"), F.col("_qvec")),
-        F.col("_cn"),
-        F.col("_qn"),
-    )
-    pw = Window.partitionBy(query_id_col).orderBy(
-        F.col("_psim").desc(), F.col(centroid_id_col).asc()
-    )
-    ranked = (
-        qv.join(F.broadcast(pc), partition_col)
-        .select(
-            query_id_col,
-            partition_col,
-            centroid_id_col,
-            F.round(psim, ROUND_DIGITS).alias("_psim"),
-        )
-        .withColumn("_r", F.row_number().over(pw))
-    )
-    if isinstance(nprobe, dict):
-        np_map = tables.literal_frame(
-            spark,
-            [(str(t), int(v)) for t, v in sorted(nprobe.items())],
-            f"{partition_col} string, _np int",
-        )
-        ranked = ranked.join(F.broadcast(np_map), partition_col).filter(
-            F.col("_r") <= F.col("_np")
-        )
-    else:
-        ranked = ranked.filter(F.col("_r") <= int(nprobe))
-    probe = ranked.select(
-        query_id_col, partition_col, centroid_id_col
-    ).localCheckpoint(eager=False)
-    pairs = (
-        probe.select(partition_col, centroid_id_col)
-        .distinct()
-        .collect()
-    )  # bounded: |queries| x nprobe
-    codes_tbl = spark.table(f"{prefix}_codes")
-    pruned = codes_tbl.filter(
-        _partition_filter([partition_col, centroid_id_col], pairs)
-    )
-    deq = _join_stats(
-        pruned, spark.table(f"{prefix}_sqstats"), partition_col
-    ).select(
-        id_col,
-        partition_col,
-        centroid_id_col,
-        _index_dequant_expr(spark, prefix, codes_col).alias("_dvec"),
-    )
-    cand = (
-        deq.withColumn("_vn", norm2(F.col("_dvec")))
-        .join(F.broadcast(probe), [partition_col, centroid_id_col])
-        .join(
-            F.broadcast(qv.select(query_id_col, "_qvec", "_qn")),
-            query_id_col,
-        )
-    )
-    sim = _cosine_from_parts(
-        dot(F.col("_dvec"), F.col("_qvec")),
-        F.col("_vn"),
-        F.col("_qn"),
-    )
-    scored = cand.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(sim, ROUND_DIGITS).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= int(k)
+    return _ivf_serve(
+        spark, prefix, queries, route, k, nprobe, scan,
+        partition_col, id_col, vec_col, query_id_col, centroid_id_col,
     )
 
 

@@ -5960,11 +5960,6 @@ def q_ivf_sq8_tenant_stored_calibration_serve(spark, sf_dir):
     wrong tenant, or a serve ignoring the stored map value-fails."""
     from embeddingsearch_spark.operators import calibration as cal_ops
     from embeddingsearch_spark.operators import sq
-    from embeddingsearch_spark.operators.sq import (
-        _codes_shifted,
-        _dequant_expr,
-        _join_stats,
-    )
     from embeddingsearch_spark.storage import drop_table
 
     prefix = "es_gate_tsq8_store"
@@ -5988,19 +5983,7 @@ def q_ivf_sq8_tenant_stored_calibration_serve(spark, sf_dir):
     qdf = emb.filter(F.col("vec_id") % 13 == 0)
     queries = qdf.select(F.col("vec_id").alias("query_id"), "embedding")
     route = qdf.select(F.col("vec_id").alias("query_id"), "source")
-    deq_all = _join_stats(
-        spark.table(f"{prefix}_codes"),
-        spark.table(f"{prefix}_sqstats"),
-        "source",
-    ).select(
-        "vec_id",
-        "source",
-        "centroid_id",
-        _dequant_expr(
-            "codes",
-            shifted=_codes_shifted(spark.table(f"{prefix}_codes")),
-        ).alias("embedding"),
-    )
+    deq_all = sq._index_rows(spark, prefix)
     cal_ops.calibrate_and_store_ivf(
         spark, prefix, queries, route, recall_target=0.9,
         partition_col="source", assigned_df=deq_all,

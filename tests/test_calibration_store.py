@@ -466,6 +466,62 @@ def test_retrain_and_recalibrate_sq8_measures_dequantized(spark, vecs):
     assert served.count() > 0
 
 
+def test_retrain_and_recalibrate_sq4_measures_packed_decode(spark, vecs):
+    """The recalibration shares the SQ8 retrain, so on a PACKED SQ4
+    generation it must decode the codes as SQ4 (an SQ8 decode of a
+    packed row yields half the dims wrong and the rest NULL): the
+    stored widths equal `ivf_calibrated_nprobe` measured over the
+    public `sq4_dequantize` of the retrained codes, the decode the SQ4
+    serve scores at."""
+    from embeddingsearch_spark.operators import sq
+
+    prefix = "es_test_calst_rrsq4"
+    for t in ("_codes", "_centroids", "_sqstats", "_calib"):
+        drop_table(spark, prefix + t)
+    w = Window.partitionBy("source").orderBy("vec_id")
+    cents = (
+        vecs.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 6)
+        .select(
+            "source", F.col("vec_id").alias("centroid_id"), "embedding"
+        )
+        .localCheckpoint(eager=True)
+    )
+    sq.save_federated_ivf_sq4_index(
+        spark,
+        ann_ops.assign_centroids_federated(vecs, cents),
+        cents, sq.sq8_stats(vecs, partition_col="source"), prefix,
+        n_buckets=2,
+    )
+    queries, route = _queries_route(vecs)
+    gx = vecs.filter(F.col("source") == "globex")
+    new_cents = (
+        gx.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= 9)
+        .select(
+            "source", F.col("vec_id").alias("centroid_id"), "embedding"
+        )
+    )
+    widths = cal.retrain_and_recalibrate_ivf_sq8_tenants(
+        spark, prefix, gx, new_cents, queries, route,
+        recall_target=0.9, n_buckets=2,
+    )
+    codes = spark.table(prefix + "_codes")
+    deq = sq.sq4_dequantize(
+        codes, spark.table(prefix + "_sqstats"), partition_col="source"
+    ).join(
+        codes.select("vec_id", "source", "centroid_id"),
+        ["vec_id", "source"],
+    )
+    want = ann_ops.ivf_calibrated_nprobe(
+        spark, prefix, queries, route, recall_target=0.9,
+        assigned_df=deq,
+    )
+    assert widths == {"globex": want["globex"]}
+    stored = cal.ivf_stored_nprobe(spark, prefix, "source")
+    assert stored["globex"] == want["globex"]
+
+
 def test_retrain_and_recalibrate_pq_tenants_refreshes_one(spark, vecs):
     """The PQ twin of the wired action arm: codebook swap + re-encode
     for the flagged tenant, stored refine factor refreshed for it

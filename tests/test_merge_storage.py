@@ -663,10 +663,6 @@ def test_ivf_auto_nprobe_through_all_serves(spark, sf_dir):
         nprobe="auto",
     )
     assert sorted(map(tuple, warm.collect())) == want
-    with pytest.raises(ValueError, match="unknown nprobe"):
-        ann_ops.ivf_federated_from_index(
-            spark, pre, queries, route, k=5, nprobe="wat"
-        )
     drop_table(spark, pre + "_talias")
 
 
@@ -779,15 +775,15 @@ def test_ivf_calibrated_nprobe_clustered_beats_rule(spark):
     assert cs1["acme"] <= 3 and cs1["globex"] <= 3, cs1
 
 
-def test_ivf_nprobe_dict_gap_raises(spark, sf_dir):
-    """A hand-built ``nprobe`` map missing a routed tenant must raise
-    — the inner width join would otherwise silently serve that
-    tenant ZERO candidates (ADVICE round-8)."""
-    import pytest as _pytest
+@pytest.fixture(scope="module")
+def ivf_layouts(spark, sf_dir):
+    """One small two-tenant corpus saved as the raw, SQ8 and packed SQ4
+    federated IVF layouts, with its (queries, route) batch."""
     from pyspark.sql import functions as F
 
     from embeddingsearch_spark import tables
     from embeddingsearch_spark.operators import ann as ann_ops
+    from embeddingsearch_spark.operators import sq
     from embeddingsearch_spark.storage import drop_table
 
     emb = tables.load(spark, sf_dir, "embeddings").filter(
@@ -795,16 +791,23 @@ def test_ivf_nprobe_dict_gap_raises(spark, sf_dir):
     ).withColumn(
         "source",
         F.when(F.col("vec_id") % 2 == 0, "acme").otherwise("globex"),
-    )
+    ).localCheckpoint(eager=True)
     cents = emb.filter(F.col("vec_id") < 4).select(
         "source", F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    for t in ("_assigned", "_centroids"):
-        drop_table(spark, "es_test_ivfgap" + t)
-    ann_ops.save_federated_ivf_index(
-        ann_ops.assign_centroids_federated(emb, cents), cents,
-        "es_test_ivfgap", n_buckets=2,
-    )
+    assigned = ann_ops.assign_centroids_federated(emb, cents)
+    stats = sq.sq8_stats(emb, partition_col="source")
+    pre = "es_test_ivfgap"
+    for t in ("_assigned", "_centroids", "_cache"):
+        drop_table(spark, pre + t)
+    ann_ops.save_federated_ivf_index(assigned, cents, pre, n_buckets=2)
+    for save, suffix in (
+        (sq.save_federated_ivf_sq8_index, "_sq8"),
+        (sq.save_federated_ivf_sq4_index, "_sq4"),
+    ):
+        for t in ("_codes", "_centroids", "_sqstats", "_cache"):
+            drop_table(spark, pre + suffix + t)
+        save(spark, assigned, cents, stats, pre + suffix, n_buckets=2)
     queries = emb.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -814,11 +817,71 @@ def test_ivf_nprobe_dict_gap_raises(spark, sf_dir):
         .otherwise("globex")
         .alias("source"),
     )
-    with _pytest.raises(ValueError, match="missing routed"):
-        ann_ops.ivf_federated_from_index(
-            spark, "es_test_ivfgap", queries, route, k=5,
-            nprobe={"acme": 3},
+    return pre, queries, route
+
+
+_NPROBE_ENTRIES = (
+    "raw", "sq8", "sq4", "scan_cost", "cached_raw", "cached_sq8"
+)
+
+
+def _serve_at(spark, layouts, entry, nprobe):
+    """Run one federated IVF entry point at ``nprobe`` (cached serves on
+    a cold cache) and collect its rows."""
+    from embeddingsearch_spark.operators import ann as ann_ops
+    from embeddingsearch_spark.operators import calibration as cal_ops
+    from embeddingsearch_spark.operators import query_cache as qc
+    from embeddingsearch_spark.operators import sq
+    from embeddingsearch_spark.storage import drop_table
+
+    pre, queries, route = layouts
+    versions = {"acme": "v1", "globex": "v1"}
+    if entry == "raw":
+        df = ann_ops.ivf_federated_from_index(
+            spark, pre, queries, route, k=5, nprobe=nprobe
         )
+    elif entry == "sq8":
+        df = sq.ivf_sq8_federated_from_index(
+            spark, pre + "_sq8", queries, route, k=5, nprobe=nprobe
+        )
+    elif entry == "sq4":
+        df = sq.ivf_sq4_federated_from_index(
+            spark, pre + "_sq4", queries, route, k=5, nprobe=nprobe
+        )
+    elif entry == "scan_cost":
+        df = cal_ops.ivf_scan_cost(
+            spark, pre, queries, route, k=5, nprobe=nprobe
+        )
+    elif entry == "cached_raw":
+        drop_table(spark, pre + "_cache")
+        df = qc.serve_ivf_federated_cached(
+            spark, pre + "_cache", pre, queries, route, versions, k=5,
+            nprobe=nprobe,
+        )
+    else:
+        drop_table(spark, pre + "_sq8_cache")
+        df = qc.serve_ivf_sq8_federated_cached(
+            spark, pre + "_sq8_cache", pre + "_sq8", queries, route,
+            versions, k=5, nprobe=nprobe,
+        )
+    return df.collect()
+
+
+@pytest.mark.parametrize("entry", _NPROBE_ENTRIES)
+def test_ivf_nprobe_dict_gap_raises(spark, ivf_layouts, entry):
+    """A hand-built ``nprobe`` map missing a routed tenant must raise
+    on every federated IVF entry point — the inner width join would
+    otherwise silently serve (or price) that tenant ZERO candidates."""
+    with pytest.raises(ValueError, match="missing routed"):
+        _serve_at(spark, ivf_layouts, entry, {"acme": 3})
+
+
+@pytest.mark.parametrize("entry", _NPROBE_ENTRIES)
+def test_ivf_unknown_nprobe_raises(spark, ivf_layouts, entry):
+    """An unknown ``nprobe`` mode raises on every federated IVF entry
+    point, the cached serves included, before any cache is written."""
+    with pytest.raises(ValueError, match="unknown nprobe"):
+        _serve_at(spark, ivf_layouts, entry, "wat")
 
 
 def test_graph_auto_config_through_production_serves(spark, sf_dir):

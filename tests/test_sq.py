@@ -536,6 +536,24 @@ def test_scan_cost_prices_compressed_layout(spark):
         assert r["corpus_rows"] == 40  # each tenant's full corpus
         assert r["nprobe"] == 2 and r["rows_scanned"] > 0
         assert 0 < r["scan_frac"] <= 1.0
+    # "calibrated" prices the widths the compressed serve measures: on
+    # the decoded codes, with no raw {prefix}_assigned table to read
+    codes = spark.table(f"{prefix}_codes")
+    deq = sq.sq8_dequantize(
+        codes, spark.table(f"{prefix}_sqstats"), partition_col="source"
+    ).join(
+        codes.select("vec_id", "source", "centroid_id"),
+        ["vec_id", "source"],
+    )
+    want = ann_ops2.ivf_calibrated_nprobe(
+        spark, prefix, queries, route, k=5, assigned_df=deq
+    )
+    rows = cal_ops.ivf_scan_cost(
+        spark, prefix, queries, route, k=5, nprobe="calibrated",
+        assigned_table=f"{prefix}_codes",
+    ).collect()
+    assert {r["source"]: r["nprobe"] for r in rows} == want
+    assert all(r["rows_scanned"] > 0 for r in rows)
 
 
 def test_tinyint_layout_serves_identically_and_upsert_preserves(spark):
